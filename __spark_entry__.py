@@ -657,18 +657,11 @@ def _q_louvain_colored(spark, sf):
     return res.c
 
 
-def _q_louvain_arrow(spark, sf):
-    e = T.cached_copurchase_edges(spark, sf)
-    nv = T.cached_copurchase_nv(spark, sf)
-    res = louvain(spark, e, nv, method="arrow", max_inner=_gate_max_inner(25))
-    return res.c
-
-
 LOUVAIN_SWEEPS = 3  # fixed sweep budget so the DuckDB twin unrolls the
                     # exact same chain (oracle/louvain_sql.py)
 
 
-def _louvain_sweeps(spark, sf, method):
+def _q_louvain_sweeps(spark, sf):
     """Exactly LOUVAIN_SWEEPS bounded phase-1 sweeps (greedy init + gain
     argmax + swap protection, ``parallelLouvianMethod_SFP`` semantics),
     restricted to edge vertices — the core Louvain sweep kernel under the
@@ -678,17 +671,9 @@ def _louvain_sweeps(spark, sf, method):
 
     e = T.cached_copurchase_edges(spark, sf)
     nv = T.cached_copurchase_nv(spark, sf)
-    res = louvain_phase(spark, e, nv, max_inner=LOUVAIN_SWEEPS, method=method)
+    res = louvain_phase(spark, e, nv, max_inner=LOUVAIN_SWEEPS)
     verts = e.select(F.col("src").alias("vid")).distinct()
     return res.c.join(verts, "vid").select("vid", "comm")
-
-
-def _q_louvain_sweeps(spark, sf):
-    return _louvain_sweeps(spark, sf, "dataframe")
-
-
-def _q_louvain_sweeps_arrow(spark, sf):
-    return _louvain_sweeps(spark, sf, "arrow")
 
 
 LOUVAIN_P2_SWEEPS = 3  # phase-2 budget for the two-phase DuckDB twin
@@ -1366,23 +1351,13 @@ def _q_graph_base(spark, sf):
 
 def _q_louvain_basic(spark, sf):
     """Fixed-budget sweep kernel + full gate-depth multi-phase driver
-    (C1-C11): `stage` = sweeps|full."""
+    (C1-C11): `stage` = sweeps|full. Registered under both
+    ``louvain_basic`` and ``louvain_arrow``: the Arrow cogroup sweep (C2)
+    is the engine's one Louvain sweep."""
     sw = _q_louvain_sweeps(spark, sf).select(
         F.lit("sweeps").alias("stage"), "vid", "comm"
     )
     full = _q_louvain(spark, sf).select(
-        F.lit("full").alias("stage"), "vid", "comm"
-    )
-    return sw.unionByName(full)
-
-
-def _q_louvain_arrow_all(spark, sf):
-    """Arrow cogrouped-kernel path (C2), fixed-budget + gate-depth:
-    `stage` = sweeps|full."""
-    sw = _q_louvain_sweeps_arrow(spark, sf).select(
-        F.lit("sweeps").alias("stage"), "vid", "comm"
-    )
-    full = _q_louvain_arrow(spark, sf).select(
         F.lit("full").alias("stage"), "vid", "comm"
     )
     return sw.unionByName(full)
@@ -1550,7 +1525,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "edge_jaccard": _q_jaccard,                     # C19
         "rcm_ordering": _q_rcm,                         # W4/C21
         "graph_coloring": _q_graph_coloring_all,        # C14+A12 merged
-        "louvain_arrow": _q_louvain_arrow_all,          # C2 merged
+        "louvain_arrow": _q_louvain_basic,              # C2: the one sweep
         "directed_louvain": _q_directed_louvain_all,    # C8 merged
         "sparsify_topk": _q_sparsify,                   # T3
         "louvain_basic": _q_louvain_basic,              # C1-C11 merged

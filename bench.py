@@ -45,13 +45,6 @@ PAGERANK_ITERS = 5
 LOUVAIN_INNER = 5
 BENCH_MAX_TURNS = 50
 BENCH_WINDOW = 16
-# kernel_agg=True (in-kernel (src, comm_dst) reduction) was measured and
-# REJECTED for the headline: it saves one JVM shuffle but ships the whole
-# raw message stream (|E| rows/sweep) through Arrow into Python — ~8x
-# slower louvain sweeps than the JVM hash-agg at 61M edge rows, where the
-# agg's map-side combine means only reduced candidates cross into the
-# kernel. Kept as a pytest-gated option for shuffle-constrained clusters.
-KERNEL_AGG = os.environ.get("SPARK_GRAFT_KERNEL_AGG", "0") == "1"
 # headline repeats: the box is a shared VM whose capacity swings several x
 # minute-to-minute; the median of BENCH_REPEATS back-to-back measurements
 # (all reported) is the headline — no best-of selection. 3 repeats make
@@ -153,8 +146,7 @@ def run_headline(spark, edges, n_rows: int, nv: int, repeats: int = BENCH_REPEAT
     # state from codegen + block-manager ramp alone)
     pagerank(spark, edges, nv, tol=0.0, max_iter=PAGERANK_ITERS,
              prepared=pr_prep, cut_every=pr_cut)
-    louvain_phase(spark, edges, nv, max_inner=LOUVAIN_INNER, method="arrow",
-                  prepared=lv_prep, kernel_agg=KERNEL_AGG)
+    louvain_phase(spark, edges, nv, max_inner=LOUVAIN_INNER, prepared=lv_prep)
 
     import statistics
 
@@ -170,8 +162,7 @@ def run_headline(spark, edges, n_rows: int, nv: int, repeats: int = BENCH_REPEAT
 
         t0 = time.time()
         res = louvain_phase(spark, edges, nv, max_inner=LOUVAIN_INNER,
-                            method="arrow", prepared=lv_prep,
-                            kernel_agg=KERNEL_AGG)
+                            prepared=lv_prep)
         res.c.count()
         t_lv = time.time() - t0
 
@@ -248,7 +239,7 @@ def main() -> None:
         ranks.count()
 
     def run_lv():
-        res = louvain(spark, edges, nv, method="arrow")
+        res = louvain(spark, edges, nv)
         res.c.count()
         return res
 

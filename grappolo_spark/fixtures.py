@@ -117,8 +117,10 @@ def symmetric_rows(undirected_edges):
 
 def to_spark_edges(spark, undirected_edges):
     """Symmetric edge DataFrame from an undirected fixture edge list."""
-    rows = symmetric_rows(undirected_edges)
-    return spark.createDataFrame(rows, "src long, dst long, weight double")
+    from .session import local_table
+
+    return local_table(spark, symmetric_rows(undirected_edges),
+                       "src long, dst long, weight double")
 
 
 def erdos_renyi(n, p_millis, seed):

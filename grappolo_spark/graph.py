@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .lineage import cut_lineage
+from .session import local_table
 
 EDGE_COLS = ("src", "dst", "weight")
 
@@ -70,11 +71,9 @@ def assign_dense_ids_with_count(
         acc += counts[pid]
 
     spark = df.sparkSession
-    offsets_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
-        )
-    )
+    offsets_df = F.broadcast(local_table(
+        spark, [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
+    ))
     w = Window.partitionBy("_pid").orderBy(*key_cols)
     out = (
         parted.withColumn("_rn", F.row_number().over(w) - 1)

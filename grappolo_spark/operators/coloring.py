@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..lineage import cut_lineage
-from ..session import scaled_shuffle_partitions
+from ..session import local_table, scaled_shuffle_partitions
 
 
 def _prio(col):
@@ -128,8 +128,9 @@ def _distance1_impl(spark, nbr, nv, max_rounds, pick="first_fit"):
             while min_unused in freq:
                 min_unused += 1
             if freq:
-                palette = F.broadcast(spark.createDataFrame(
-                    [(int(c), int(n)) for c, n in freq.items()], "t int, fc long"
+                palette = F.broadcast(local_table(
+                    spark, [(int(c), int(n)) for c, n in freq.items()],
+                    "t int, fc long",
                 ))
                 picked = (
                     unc.crossJoin(palette)
@@ -621,8 +622,8 @@ def bbase_coloring(
                 new_freq[ci] -= n_move
                 new_freq[ti] = new_freq.get(ti, 0) + n_move
 
-    plan = F.broadcast(spark.createDataFrame(
-        plan_rows, "base_color int, t int, st long, en long"
+    plan = F.broadcast(local_table(
+        spark, plan_rows, "base_color int, t int, st long, en long"
     ))
     # rank donor-class members by descending priority; slab interval join
     win = Window.partitionBy("base_color").orderBy(F.desc("prio"))
@@ -756,8 +757,8 @@ def rbase_coloring(
             .distinct()
         )
         if full:
-            full_df = F.broadcast(spark.createDataFrame(
-                [(int(c),) for c in full], "t int"))
+            full_df = F.broadcast(local_table(
+                spark, [(int(c),) for c in full], "t int"))
             cand = cand.join(full_df, "t", "left_anti")
         tent = (
             cand.join(used, ["src", "t"], "left_anti")

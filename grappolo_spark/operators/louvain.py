@@ -1,13 +1,16 @@
-"""Multi-phase Louvain as deterministic DataFrame supersteps (SURVEY §2.11).
+"""Multi-phase Louvain as deterministic Spark supersteps (SURVEY §2.11).
 
 Re-expresses the reference's default dispatch path — ``runMultiPhaseBasic``
 (``runMultiPhaseBasic.cpp:66-204``) over ``parallelLouvianMethod_SFP``
 (``vectorizedLouvainMethod.cpp:48-371``) — as Spark jobs:
 
-* one local-move sweep  = J1 (edges ⋈ C on dst) → A3 (groupBy(src, comm)
-  weight sum) → J2 (⋈ commInfo) → A5 (gain argmax, min-cid tie-break,
-  singleton swap protection) — all inside whole-stage codegen, zero Python
-  in the hot path;
+* one local-move sweep = the Arrow cogroup sweep, the engine's one sweep
+  (``louvain_phase``): community info + state table → message join on
+  dst (the target community's degree/size ride each message) → JVM
+  (src, comm_dst) weight aggregation → cogrouped numpy kernel doing the
+  gain argmax, min-cid tie-break and singleton swap protection per
+  vertex block — the twin of the reference's AVX-512 gain argmax
+  (SURVEY §2.10). No per-row Python: the kernel sees whole Arrow blocks;
 * Jacobi snapshot semantics (``parallelLouvainMethod.cpp:146-236``) are the
   *default* with immutable DataFrames: every sweep reads the iteration-start
   ``C``/``commInfo`` and moves are applied after the sweep;
@@ -22,6 +25,8 @@ Re-expresses the reference's default dispatch path — ``runMultiPhaseBasic``
 * coarsening = edges ⋈ C(src) ⋈ C(dst) → groupBy — one shuffle
   (``buildNextPhase.cpp:145-236``; intra weight lands doubled on the
   self-loop pair automatically because every symmetric row is accumulated);
+* once the coarse graph is small, the remaining phases run on the driver
+  through the numpy oracle (``louvain``'s driver tail);
 * caps 25 inner iterations / 200 phases / 100k total iterations
   (``parallelLouvainMethod.cpp:217``, ``runMultiPhaseBasic.cpp:128``).
 
@@ -31,26 +36,26 @@ integer-valued edge weights both are exact in float64, and the gain
 expression is written with the reference's association order so Spark and
 the numpy oracle produce bit-identical doubles.
 
-Scale: the two shuffles per sweep (candidate aggregation, commInfo
-recompute) are the per-superstep cost — proportional to |E| like the
-reference's edge visits. ``commInfo`` shrinks with every phase and is
-broadcast by AQE on coarse graphs. Lineage is cut every iteration via
-``localCheckpoint``; with a CheckpointManager the sweep state also lands in
-Parquet + manifest so runs resume mid-phase.
+Scale: the message aggregation and the cogroup block exchange are the
+per-superstep E-scale cost — proportional to |E| like the reference's
+edge visits. Community info shrinks with every phase. Lineage is cut
+every iteration via ``localCheckpoint``; with a CheckpointManager the
+sweep state also lands in Parquet + manifest so runs resume mid-phase.
+
+The color-staged phase (``louvain_phase_colored``) keeps its own
+DataFrame sweep: its Gauss-Seidel class loop is a different schedule.
 """
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import assign_dense_ids_with_count
 from ..lineage import cut_lineage, pin_partitioned, release
-from ..session import scaled_shuffle_partitions
+from ..session import local_table, scaled_shuffle_partitions
 
 
 # ---------------------------------------------------------------------------
@@ -140,12 +145,10 @@ def _apply_sampling(target, sample_pct, it):
         )
         < F.lit(sample_pct)
     )
-    extra = [c for c in ("own_w", "degree", "self_w", "_a2t") if c in target.columns]
     return target.select(
         "vid",
         F.when(mask, F.col("comm")).otherwise(F.col("sc")).alias("comm"),
-        "sc",
-        *extra,
+        "sc", "own_w", "degree", "self_w", "_a2t",
     )
 
 
@@ -153,40 +156,14 @@ def _apply_sampling(target, sample_pct, it):
 # Arrow/CSR-block sweep kernel (the reference's vectorized path, SURVEY §2.10)
 # ---------------------------------------------------------------------------
 
-def _kernel_reduce_raw(cand):
-    """In-kernel (src, comm_dst) reduction of RAW message rows: numpy
-    lexsort + add.reduceat replaces the JVM hash aggregation. Sums are
-    in-order float64 over integer-valued weights — exact, so downstream
-    gains are bit-identical to the JVM-agg path.
-    """
-    import numpy as np
-    import pandas as pd
-
-    vid = cand["src"].to_numpy(np.int64)
-    cd = cand["comm_dst"].to_numpy(np.int64)
-    w = cand["weight"].to_numpy(np.float64)
-    ay = cand["ay"].to_numpy(np.float64)
-    sy = cand["size_y"].to_numpy(np.int64)
-    o = np.lexsort((cd, vid))
-    vid, cd, w, ay, sy = vid[o], cd[o], w[o], ay[o], sy[o]
-    starts = np.ones(len(vid), bool)
-    starts[1:] = (vid[1:] != vid[:-1]) | (cd[1:] != cd[:-1])
-    idx = np.flatnonzero(starts)
-    return pd.DataFrame({
-        "src": vid[idx], "comm_dst": cd[idx],
-        "eiy": np.add.reduceat(w, idx),
-        "ay": ay[idx], "size_y": sy[idx],
-    })
-
-
-def _arrow_cogroup_kernel(const: float, raw: bool = False):
+def _arrow_cogroup_kernel(const: float):
     """Cogrouped numpy sweep: per block, the candidate rows — whose target
     community's ``(ay, size_y)`` already rode the message — meet the
     per-vertex state rows; merge, gain, argmax, tie-break and swap
     protection all run vectorized in numpy with zero per-row Python and
     NO JVM candidate-by-state join. This is the engine twin of the
     reference's AVX-512 gain argmax (``utilityClusteringFunctions.cpp:
-    869-950``), bit-identical to the DataFrame path: the gain expression
+    869-950``), bit-identical to the numpy oracle: the gain expression
     keeps the reference's association order and the (-gain, cid) lexsort
     reproduces the max-gain/min-cid tie-break (``:746-759``).
     """
@@ -202,8 +179,6 @@ def _arrow_cogroup_kernel(const: float, raw: bool = False):
     def sweep(cand: "pd.DataFrame", st: "pd.DataFrame") -> "pd.DataFrame":
         if len(st) == 0:
             return pd.DataFrame({k: pd.Series(dtype=t) for k, t in empty.items()})
-        if raw and len(cand):
-            cand = _kernel_reduce_raw(cand)
         o = np.argsort(st["vid"].to_numpy(np.int64))  # vids are unique
         svid = st["vid"].to_numpy(np.int64)[o]
         ssc = st["sc"].to_numpy(np.int64)[o]
@@ -262,24 +237,18 @@ def _arrow_cogroup_kernel(const: float, raw: bool = False):
     return sweep
 
 
-def _sweep_arrow_cogrouped(cand, state, const, nblocks, raw=False):
+def _sweep_arrow_cogrouped(cand, state, const, nblocks):
     """Build the target assignment with the cogrouped Arrow kernel: one
-    shuffle of each side by vid-block replaces the scored-best-target join
-    chain of the DataFrame path AND the candidate-level info/state joins.
-
-    ``raw=True``: ``cand`` is the raw message stream (src, weight,
-    comm_dst, ay, size_y) and the (src, comm_dst) reduction happens inside
-    the kernel — ONE block exchange of |E| rows instead of the JVM
-    hash-agg exchange (≈|E| in the early-sweep regime where most
-    neighbours are in distinct communities) plus a candidate exchange.
-    Best for bounded-sweep workloads; for long convergence runs the
-    JVM agg's map-side combine wins once communities have collapsed
-    (candidates << |E|).
+    shuffle of each side by vid-block, and the kernel merges candidate
+    and state rows, so no JVM candidate-by-state join exists. ``cand`` is
+    the JVM-aggregated (src, comm_dst, eiy, ay, size_y) table — the hash
+    aggregation's map-side combine keeps the rows crossing into Python
+    at candidate scale, not |E| scale.
     """
     c = cand.withColumn("block", F.col("src") % F.lit(nblocks))
     s = state.withColumn("block", F.col("vid") % F.lit(nblocks))
     return c.groupBy("block").cogroup(s.groupBy("block")).applyInPandas(
-        _arrow_cogroup_kernel(const, raw=raw),
+        _arrow_cogroup_kernel(const),
         "vid long, comm long, sc long, own_w double, degree double,"
         " self_w double, _a2t double",
     )
@@ -371,21 +340,23 @@ def louvain_phase(
     max_inner: int = 25,
     checkpoint=None,
     phase_tag: str = "phase",
-    method: str = "dataframe",
     sample_pct: float | None = None,
     hub_salt: int | None = None,
     prepared: tuple[DataFrame, DataFrame, float, DataFrame] | None = None,
-    kernel_agg: bool = False,
-    fuse_state: bool = False,
-    chain_sweeps: int = 1,
-    active_prune: float | None = None,
 ) -> PhaseResult:
     """One Louvain phase with exact reference SFP-path semantics.
 
-    ``method``: "dataframe" = pure whole-stage-codegen join/agg sweep;
-    "arrow" = Arrow-batched numpy argmax kernel (the reference's own
-    vectorized-path split, ``vectorizedLouvainMethod.cpp``) — bit-identical
-    results, fewer stages per superstep.
+    Every sweep is the Arrow cogroup sweep (the reference's own
+    vectorized-path split, ``vectorizedLouvainMethod.cpp``): community
+    info (one groupBy over the state) → state table (checkpointed; read
+    by the message join and the cogroup) → message join on dst, whose
+    rows carry the target community's (ay, size_y) → JVM hash
+    aggregation to (src, comm_dst) candidates → cogrouped numpy gain
+    argmax (``_arrow_cogroup_kernel``) → checkpointed target, with e_xx,
+    moved and Σ c_degree² observed on that same job. Static vertex attrs
+    (degree, self-loop weight) are joined once per phase and ride the
+    state. Assignment and trajectory are bit-identical to
+    ``oracle.louvain_phase_np``.
 
     ``sample_pct``: Approx variant (ref C5, ``parallelLouvainMethodApprox.
     cpp:139-155``): only vertices with pmod(xxhash64(vid, iter), 100) <
@@ -397,79 +368,19 @@ def louvain_phase(
     repeated phases over the same graph so the static sides (one full edge
     shuffle + sort) are built once, not per call.
 
-    ``kernel_agg`` (arrow path only): move the (src, comm_dst) message
-    reduction inside the Arrow kernel — one E-scale block exchange per
-    sweep instead of the JVM hash-agg exchange plus the candidate
-    exchange. Bit-identical (in-order float64 sums over integer-valued
-    weights); wins in the early-sweep regime (candidates ≈ |E|), loses
-    map-side combine so prefer the default for long convergence runs.
-
-    ``fuse_state`` (arrow path only): leave the per-sweep state table lazy
-    instead of materializing it between its two consumers (the message
-    join and the cogroup). Measured and REJECTED as the default at 61M
-    edge rows / local[32]: AQE already runs every exchange as its own
-    stage-job, so fusing saves no driver round-trips, while column
-    pruning specializes the two state instances differently and defeats
-    ReuseExchange — the |V|-scale state subtree computes twice
-    (interleaved A/B: 0.38-0.99x pairwise). Kept as an option for
-    storage-constrained clusters where a |V|-row checkpoint write per
-    sweep is the scarcer resource. Bit-identical either way (pytest).
-
-    ``chain_sweeps`` (arrow path, no durable checkpoint): run the sweeps
-    in lazily-chained batches of this size — one Spark action per batch
-    instead of two eager materializations per sweep, with every per-sweep
-    intermediate ``persist()``-ed (the PageRank ``cut_every`` pattern
-    applied to Louvain). Per-sweep stats still ride Observations; stop
-    conditions are evaluated post-batch, and the returned PhaseResult
-    (assignment, num_iters, trajectory) is truncated to the exact sweep
-    the unchained loop would have stopped at — a sweep at a fixed point
-    is a no-op, so overshoot cannot change the assignment (pytest-gated
-    bit-equality: tests/test_louvain.py). Measured and REJECTED as the
-    default at BOTH scales: unlike PageRank's linear superstep plan, the
-    Louvain sweep consumes its state twice (message join + cogroup), so
-    chaining k sweeps builds a 2^k-path plan tree — Catalyst analysis
-    alone goes pathological past k≈4 (clamped), and under AQE every
-    exchange already runs as its own stage-job so no driver round-trips
-    are actually saved: karate 17s→59s (chain 1→2), 61M-row bench corpus
-    166s→182s. Kept as the documented experiment closing round-2 item #4;
-    the honest residual is the per-superstep constant, decomposed in
-    BENCH.md.
-
-    ``active_prune`` (arrow path, exact): per-sweep ACTIVE-VERTEX pruning
-    of the Jacobi evaluation. A vertex whose own community AND every
-    neighbour's community were untouched by the previous sweep's moves
-    sees bit-identical argmax inputs (eiy per candidate is unchanged —
-    no neighbour regrouped; ay/size_y and ax_full/size_sc are unchanged
-    — no touched community among its candidates or its own), so its
-    decision equals the previous sweep's decision: STAY (had it wanted
-    to move, it would have moved then and its community would be
-    touched). Such vertices bypass the kernel entirely and pass their
-    previous row through (own_w carried from the previous target,
-    _a2t = degree·ax_full recomputed from the CURRENT state — equal by
-    the same argument). The value is the threshold moved-fraction below
-    which pruning engages (the early sweeps move half the graph — there
-    the active set ≈ V and the pruning joins are pure overhead); two
-    more guards fall back to a full sweep when the touched communities
-    hold more than the threshold fraction of vertices (one move into a
-    giant community invalidates every member) or the computed active set
-    exceeds half of nv. Bit-exact by construction and pytest-gated
-    against the unpruned path (tests/test_louvain.py).
-
     ``hub_salt``: explicit skew handling for hub vertices (the engine twin
     of the reference GPU port's degree-binned execution,
-    ``binWiseGaussSeidel.cu:104-128``): the J1+A3 candidate aggregation
-    becomes two-stage — partial ``groupBy(src, comm_dst, salt)`` with
+    ``binWiseGaussSeidel.cu:104-128``): the candidate aggregation becomes
+    two-stage — partial ``groupBy(src, comm_dst, salt)`` with
     salt = pmod(xxhash64(dst), hub_salt) spreading one hub's rows over
     ``hub_salt`` reducers, then a final re-agg on (src, comm_dst). Sum
     values are identical for integer-valued weights (float64-exact); AQE's
     skew-join handling covers the join side either way.
+
+    With a ``checkpoint`` manager each sweep's assignment lands in
+    Parquet + manifest under ``phase_tag``, and a rerun resumes from the
+    latest saved sweep.
     """
-    if method == "arrow" and chain_sweeps > 1 and checkpoint is None:
-        return _louvain_phase_arrow_chained(
-            spark, edges, nv, lower=lower, max_inner=max_inner,
-            sample_pct=sample_pct, hub_salt=hub_salt, prepared=prepared,
-            kernel_agg=kernel_agg, chain_sweeps=chain_sweeps,
-        )
     if prepared is None:
         # size stage granularity to THIS graph for the whole phase (incl.
         # the prepare shuffle, so the pinned partitioning matches): on
@@ -480,11 +391,9 @@ def louvain_phase(
         with scaled_shuffle_partitions(spark, edges.count()):
             return louvain_phase(
                 spark, edges, nv, lower=lower, max_inner=max_inner,
-                checkpoint=checkpoint, phase_tag=phase_tag, method=method,
+                checkpoint=checkpoint, phase_tag=phase_tag,
                 sample_pct=sample_pct, hub_salt=hub_salt,
-                prepared=louvain_prepare(edges), kernel_agg=kernel_agg,
-                fuse_state=fuse_state, chain_sweeps=chain_sweeps,
-                active_prune=active_prune,
+                prepared=louvain_prepare(edges),
             )
     edges, deg, two_m, selfw = prepared
     const = 1.0 / two_m if two_m > 0 else 0.0
@@ -498,357 +407,107 @@ def louvain_phase(
             start_iter = state.meta["iteration"]
     if curr is None:
         curr = louvain_init(edges, deg, const)
-    curr = curr.transform(cut_lineage)
-    curr_backing = curr  # checkpoint behind the current assignment
+    init_ck = curr.transform(cut_lineage)
 
-    curr2 = None
-    if method == "arrow":
-        # static vertex attrs (degree, self-loop weight) ride the state —
-        # joined ONCE per phase and carried through every sweep checkpoint,
-        # so the per-sweep plan contains no deg/selfw join at all
-        vattr = deg.join(selfw, "vid", "left").select(
-            "vid", "degree", F.coalesce("self_w", F.lit(0.0)).alias("self_w")
-        )
-        init_ck = curr
-        curr2 = cut_lineage(curr.join(vattr, "vid"))
-        curr = curr2.select("vid", "comm")
-        curr_backing = curr2
-        release(init_ck)
+    # static vertex attrs (degree, self-loop weight) ride the state —
+    # joined ONCE per phase and carried through every sweep checkpoint,
+    # so the per-sweep plan contains no deg/selfw join at all
+    vattr = deg.join(selfw, "vid", "left").select(
+        "vid", "degree", F.coalesce("self_w", F.lit(0.0)).alias("self_w")
+    )
+    curr2 = cut_lineage(init_ck.join(vattr, "vid"))
+    curr = curr2.select("vid", "comm")
+    curr_backing = curr2  # checkpoint behind the current assignment
+    release(init_ck)
 
     prev_mod = -1.0
     change = False
     num_iters = start_iter
     trajectory = []
-    # active-vertex pruning state: the previous sweep's full target (which
-    # carries own_w) and its applied-move count; both None until one full
-    # in-session arrow sweep has run
-    prev_target = None
-    prev_moved = None
-    # SPARK_GRAFT_SWEEP_TRACE=1: per-sweep wall/moved/mode diagnostics
-    # (arrow path) — measurement-only, no plan change; feeds BENCH.md's
-    # active-prune attribution
-    trace = os.environ.get("SPARK_GRAFT_SWEEP_TRACE") == "1"
+    nblocks = spark.sparkContext.defaultParallelism
 
     while True:
         num_iters += 1
-        t_sweep = time.time()
-
-        if method == "arrow":
-            # v2 sweep: the candidate community's (c_degree, c_size) ride
-            # the MESSAGE — every dst state row already knows its own
-            # community's info, which IS the (ay, size_y) the gain needs —
-            # so no candidate-level info join exists; the per-vertex state
-            # merge happens inside the cogrouped Arrow kernel instead of a
-            # JVM candidate×state join.
-            info = (
-                curr2.filter(F.col("comm") >= 0)
-                .groupBy("comm")
-                .agg(F.count("*").alias("c_size"),
-                     F.sum("degree").alias("c_degree"))
-            )
-            # a2_x = Σ_c c_degree² (≡ Σ_v degree·ax_full, exact for the
-            # integer-valued weights the engine guarantees) rides the
-            # TARGET job via the kernel's _a2t column, so the state table
-            # needs no observation of its own; the state materialization
-            # exists purely so its two consumers (the message join and
-            # the cogroup) share one computation (see fuse_state above).
-            state = curr2.join(info, "comm").select(
-                "vid", F.col("comm").alias("sc"), "degree", "self_w",
-                F.col("c_degree").alias("ax_full"),
-                F.col("c_size").alias("size_sc"),
-            )
-            if not fuse_state:
-                state = cut_lineage(state)
-            cdst2 = state.select(
-                F.col("vid").alias("dst"), F.col("sc").alias("comm_dst"),
-                F.col("ax_full").alias("ay"), F.col("size_sc").alias("size_y"),
-            )
-            # active-vertex pruning (see the docstring's exactness
-            # argument): engage only when the previous sweep moved few
-            # vertices AND the touched communities are small AND the
-            # computed active set stays under half of nv
-            active = None
-            n_active = None
-            if (
-                active_prune is not None and sample_pct is None
-                and prev_target is not None and prev_moved is not None
-                and 0 < prev_moved <= active_prune * nv
-            ):
-                movers = prev_target.filter(F.col("comm") != F.col("sc"))
-                tcomms = (
-                    movers.select(F.col("comm").alias("tc"))
-                    .union(movers.select(F.col("sc").alias("tc")))
-                    .distinct()
-                )
-                tsz = (
-                    info.join(F.broadcast(tcomms),
-                              F.col("comm") == F.col("tc"))
-                    .agg(F.sum("c_size")).collect()[0][0]
-                )
-                if tsz is not None and tsz <= active_prune * nv:
-                    base_t = state.join(
-                        F.broadcast(tcomms), F.col("sc") == F.col("tc")
-                    ).select("vid")
-                    nbr_t = edges.join(
-                        F.broadcast(base_t.withColumnRenamed("vid", "dst")),
-                        "dst",
-                    ).select(F.col("src").alias("vid"))
-                    cand_active = cut_lineage(base_t.union(nbr_t).distinct())
-                    # cap = max(0.5, threshold): thresholds <= 0.5 fall
-                    # back to a full sweep when the active set exceeds
-                    # half the graph; threshold 1.0 means "always prune"
-                    # (the pytest bit-equality setting)
-                    n_active = cand_active.count()
-                    if n_active <= max(0.5, active_prune) * nv:
-                        active = cand_active
-                    else:
-                        release(cand_active)
-            st_eval = state
-            if active is not None:
-                st_eval = state.join(F.broadcast(active), "vid")
-                msg = edges.join(
-                    F.broadcast(active.withColumnRenamed("vid", "src")),
-                    "src",
-                ).join(cdst2, "dst")
-            else:
-                msg = edges.join(cdst2, "dst")
-            if kernel_agg and not hub_salt:
-                # raw message stream straight into the kernel: the
-                # (src, comm_dst) reduction happens Arrow-side (see
-                # _sweep_arrow_cogrouped raw=True) — one E-scale exchange
-                # per sweep instead of two in the early-sweep regime
-                cand = msg.select("src", "weight", "comm_dst", "ay", "size_y")
-            elif hub_salt:
-                # two-stage salted aggregation: spread hub keys over
-                # hub_salt reducers before the final combine
-                salt = F.pmod(F.xxhash64(F.col("dst").cast("long")), F.lit(hub_salt))
-                cand = (
-                    msg.groupBy("src", "comm_dst", salt.alias("_salt"))
-                    .agg(F.sum("weight").alias("eiy"),
-                         F.first("ay").alias("ay"),
-                         F.first("size_y").alias("size_y"))
-                    .groupBy("src", "comm_dst")
-                    .agg(F.sum("eiy").alias("eiy"),
-                         F.first("ay").alias("ay"),
-                         F.first("size_y").alias("size_y"))
-                )
-            else:
-                cand = (
-                    msg.groupBy("src", "comm_dst")
-                    .agg(F.sum("weight").alias("eiy"),
-                         F.first("ay").alias("ay"),
-                         F.first("size_y").alias("size_y"))
-                )
-            # ALL per-sweep bookkeeping (e_xx, moved, a2_x) rides the
-            # target-materialization job as observed metrics — zero stats
-            # jobs; _a2t is projected off before the checkpoint stores the
-            # state
-            obs_target = Observation()
-            sweep_out = _apply_sampling(
-                _sweep_arrow_cogrouped(
-                    cand, st_eval, const, spark.sparkContext.defaultParallelism,
-                    raw=kernel_agg and not hub_salt,
-                ),
-                sample_pct, num_iters,
-            )
-            if active is not None:
-                # provably-fixed vertices bypass the kernel: same comm,
-                # own_w carried from the previous target, _a2t recomputed
-                # from the CURRENT state (equal by the exactness argument)
-                passthrough = (
-                    state.join(F.broadcast(active), "vid", "left_anti")
-                    .join(prev_target.select(
-                        "vid", F.col("own_w").alias("_pw")), "vid")
-                    .select(
-                        "vid", F.col("sc").alias("comm"), "sc",
-                        F.col("_pw").alias("own_w"), "degree", "self_w",
-                        (F.col("degree") * F.col("ax_full")).alias("_a2t"),
-                    )
-                )
-                sweep_out = sweep_out.unionByName(passthrough)
-            target = cut_lineage(
-                sweep_out.observe(
-                    obs_target,
-                    F.sum("own_w").alias("e_xx"),
-                    F.sum(
-                        F.when(F.col("comm") != F.col("sc"), 1).otherwise(0)
-                    ).alias("moved"),
-                    F.sum("_a2t").alias("a2_x"),
-                ).select("vid", "comm", "sc", "own_w", "degree", "self_w")
-            )
-            e_xx = obs_target.get["e_xx"] or 0.0
-            a2_x = obs_target.get["a2_x"] or 0.0
-            curr_mod = e_xx * const - a2_x * const * const
-            trajectory.append(curr_mod)
-            moved = obs_target.get["moved"] or 0
-            release(state)
-            if active is not None:
-                release(active)
-            if trace:
-                print(
-                    f"[sweep {phase_tag or 'p'}#{num_iters}] "
-                    f"{time.time() - t_sweep:.1f}s moved={moved} "
-                    f"mode={'pruned' if active is not None else 'full'} "
-                    f"active={n_active}",
-                    flush=True,
-                )
-            if moved > 0:
-                change = True
-            if moved == 0 or num_iters >= max_inner:
-                break
-            prev_mod = max(curr_mod, lower)
-            # target is already a checkpointed LogicalRDD — the projection
-            # is free; re-checkpointing it would copy |V| rows per sweep.
-            # The superseded assignment's checkpoint blocks are freed
-            # eagerly (waiting on the GC-driven cleaner OOMs long runs).
-            release(curr_backing)
-            curr_backing = target
-            prev_target = target
-            prev_moved = int(moved)
-            curr2 = target.select("vid", "comm", "degree", "self_w")
-            curr = target.select("vid", "comm")
-            if checkpoint is not None:
-                checkpoint.save(
-                    phase_tag,
-                    meta={"iteration": num_iters, "modularity": float(curr_mod),
-                          "moved": int(moved)},
-                    dataframes={"c": curr},
-                )
-            continue
-
-        info = comm_info(curr, deg).cache()
-
-        # J1+A3: weight from each vertex to each neighbouring community
-        # (self-loops included — they land in the own-community bucket)
-        cdst = curr.select(F.col("vid").alias("dst"), F.col("comm").alias("comm_dst"))
-        joined = edges.join(cdst, "dst")
+        # the candidate community's (c_degree, c_size) ride the MESSAGE —
+        # every dst state row already knows its own community's info,
+        # which IS the (ay, size_y) the gain needs — so no candidate-level
+        # info join exists; the per-vertex state merge happens inside the
+        # cogrouped Arrow kernel instead of a JVM candidate×state join.
+        info = (
+            curr2.filter(F.col("comm") >= 0)
+            .groupBy("comm")
+            .agg(F.count("*").alias("c_size"),
+                 F.sum("degree").alias("c_degree"))
+        )
+        # a2_x = Σ_c c_degree² (≡ Σ_v degree·ax_full, exact for the
+        # integer-valued weights the engine guarantees) rides the TARGET
+        # job via the kernel's _a2t column, so the state table needs no
+        # observation of its own; the state materialization exists so its
+        # two consumers (the message join and the cogroup) share one
+        # computation — left lazy, column pruning specializes the two
+        # instances differently and the |V|-scale subtree computes twice.
+        state = cut_lineage(curr2.join(info, "comm").select(
+            "vid", F.col("comm").alias("sc"), "degree", "self_w",
+            F.col("c_degree").alias("ax_full"),
+            F.col("c_size").alias("size_sc"),
+        ))
+        cdst2 = state.select(
+            F.col("vid").alias("dst"), F.col("sc").alias("comm_dst"),
+            F.col("ax_full").alias("ay"), F.col("size_sc").alias("size_y"),
+        )
+        msg = edges.join(cdst2, "dst")
         if hub_salt:
             # two-stage salted aggregation: spread hub keys over hub_salt
             # reducers before the final combine (GPU degree-bin playbook)
             salt = F.pmod(F.xxhash64(F.col("dst").cast("long")), F.lit(hub_salt))
-            cand = (
-                joined.groupBy("src", "comm_dst", salt.alias("_salt"))
-                .agg(F.sum("weight").alias("eiy"))
-                .groupBy("src", "comm_dst")
-                .agg(F.sum("eiy").alias("eiy"))
-                .cache()
+            msg = (
+                msg.groupBy("src", "comm_dst", salt.alias("_salt"))
+                .agg(F.sum("weight").alias("weight"),
+                     F.first("ay").alias("ay"),
+                     F.first("size_y").alias("size_y"))
             )
-        else:
-            cand = (
-                joined.groupBy("src", "comm_dst")
-                .agg(F.sum("weight").alias("eiy"))
-                .cache()
-            )
-
-        # own-community weight (counter[sc], self-loop included) per vertex
-        own = (
-            curr.withColumnRenamed("comm", "sc")
-            .join(
-                cand.select(
-                    F.col("src").alias("vid"),
-                    F.col("comm_dst").alias("sc"),
-                    F.col("eiy").alias("own_w"),
-                ),
-                ["vid", "sc"],
-                "left",
-            )
-            .select("vid", "sc", F.coalesce("own_w", F.lit(0.0)).alias("own_w"))
+        cand = (
+            msg.groupBy("src", "comm_dst")
+            .agg(F.sum("weight").alias("eiy"),
+                 F.first("ay").alias("ay"),
+                 F.first("size_y").alias("size_y"))
         )
-
-        # J2+A5: gain per candidate community, argmax with min-cid ties
-        base = (
-            own.join(deg, "vid")
-            .join(
-                info.select(F.col("comm").alias("sc"), F.col("c_degree").alias("ax_full"),
-                            F.col("c_size").alias("size_sc")),
-                "sc",
-            )
-            .join(selfw, "vid", "left")
-            .select(
-                "vid", "sc", "degree", "size_sc", "own_w",
-                (F.col("own_w") - F.coalesce("self_w", F.lit(0.0))).alias("eix"),
-                (F.col("ax_full") - F.col("degree")).alias("ax"),
-            )
-        )
-        scored = (
-            cand.withColumnRenamed("src", "vid")
-            .join(base, "vid")
-            .filter(F.col("comm_dst") != F.col("sc"))
-            .join(
-                info.select(F.col("comm").alias("comm_dst"),
-                            F.col("c_degree").alias("ay"),
-                            F.col("c_size").alias("size_y")),
-                "comm_dst",
-            )
-            .select(
-                "vid", "sc", "comm_dst", "size_sc", "size_y",
-                _gain(F.col("eiy"), F.col("eix"), F.col("degree"),
-                      F.col("ay"), F.col("ax"), F.lit(const)).alias("gain"),
-            )
-        )
-        best = (
-            scored.filter(F.col("gain") > 0)
-            .groupBy("vid")
-            .agg(
-                F.max_by(
-                    F.struct("comm_dst", "size_y"),
-                    F.struct(F.col("gain"), -F.col("comm_dst")),
-                ).alias("b")
-            )
-            .select("vid", F.col("b.comm_dst").alias("cand_comm"),
-                    F.col("b.size_y").alias("cand_size"))
-        )
-        # all per-sweep bookkeeping rides the target-materialization job as
-        # observed metrics (no separate stats job): e_xx = Σ own_w, moved,
-        # and a2_x = Σ_v degree·ax_full ≡ Σ_c c_degree² (exact for the
-        # integer-valued weights the engine guarantees; ax_full = ax+degree
-        # is carried as a throwaway term and projected off before the
-        # checkpoint stores the state)
+        # ALL per-sweep bookkeeping (e_xx, moved, a2_x) rides the
+        # target-materialization job as observed metrics — zero stats
+        # jobs; _a2t is projected off before the checkpoint stores the
+        # state
         obs_target = Observation()
         target = cut_lineage(
-            base.join(best, "vid", "left")
-            .select(
-                "vid",
-                F.when(F.col("cand_comm").isNull(), F.col("sc"))
-                .when(  # singleton swap protection (ref :757-759)
-                    (F.col("cand_size") == 1)
-                    & (F.col("size_sc") == 1)
-                    & (F.col("cand_comm") > F.col("sc")),
-                    F.col("sc"),
-                )
-                .otherwise(F.col("cand_comm"))
-                .alias("comm"),
-                F.col("sc"),
-                F.col("own_w"),
-                (F.col("degree") * (F.col("ax") + F.col("degree"))).alias("_a2t"),
-            )
-            .transform(lambda t: _apply_sampling(t, sample_pct, num_iters))
-            .observe(
+            _apply_sampling(
+                _sweep_arrow_cogrouped(cand, state, const, nblocks),
+                sample_pct, num_iters,
+            ).observe(
                 obs_target,
                 F.sum("own_w").alias("e_xx"),
                 F.sum(
                     F.when(F.col("comm") != F.col("sc"), 1).otherwise(0)
                 ).alias("moved"),
                 F.sum("_a2t").alias("a2_x"),
-            )
-            .select("vid", "comm", "sc", "own_w")
+            ).select("vid", "comm", "sc", "own_w", "degree", "self_w")
         )
-
         stats = obs_target.get
         curr_mod = (stats["e_xx"] or 0.0) * const - (stats["a2_x"] or 0.0) * const * const
         trajectory.append(curr_mod)
         moved = stats["moved"] or 0
-        info.unpersist()
-        cand.unpersist()
+        release(state)
         if moved > 0:
             change = True
         if moved == 0 or num_iters >= max_inner:
             # phase returns the assignment the final sweep READ
             break
-
         prev_mod = max(curr_mod, lower)
+        # target is already a checkpointed LogicalRDD — the projection
+        # is free; re-checkpointing it would copy |V| rows per sweep.
+        # The superseded assignment's checkpoint blocks are freed
+        # eagerly (waiting on the GC-driven cleaner OOMs long runs).
         release(curr_backing)
         curr_backing = target
+        curr2 = target.select("vid", "comm", "degree", "self_w")
         curr = target.select("vid", "comm")
         if checkpoint is not None:
             checkpoint.save(
@@ -869,175 +528,6 @@ def louvain_phase(
         all_v.join(curr, "vid", "left")
         .select("vid", F.coalesce("comm", iso_fill).alias("comm"))
     )
-    return PhaseResult(c_full, prev_mod, num_iters, change, trajectory)
-
-
-def _louvain_phase_arrow_chained(
-    spark: SparkSession,
-    edges: DataFrame,
-    nv: int,
-    lower: float = -1.0,
-    max_inner: int = 25,
-    sample_pct: float | None = None,
-    hub_salt: int | None = None,
-    prepared=None,
-    kernel_agg: bool = False,
-    chain_sweeps: int = 5,
-) -> PhaseResult:
-    """Chained-batch twin of the arrow path of ``louvain_phase``: see the
-    ``chain_sweeps`` paragraph of its docstring. The plan per sweep is the
-    SAME construction (info → state → message join → candidate agg →
-    cogrouped kernel → observe), but state/target are lazy ``persist()``
-    nodes instead of eager checkpoints and one action per batch
-    materializes the whole chain. The per-batch boundary cuts lineage so
-    chained stats cannot compound across batches.
-    """
-    from ..lineage import _ckpt_level
-
-    # each lazily-chained sweep references its predecessor TWICE (the info/
-    # state join side and the cogroup side), so Catalyst's tree-walking
-    # analysis visits 2^k paths for a k-deep chain: k=4 (16 paths) is
-    # measured fine, k=8 (256 paths) pathological (minutes of driver-side
-    # planning on a 6-vertex fixture). Clamp rather than trust the caller.
-    chain_sweeps = min(int(chain_sweeps), 4)
-
-    if prepared is not None:
-        edges, deg, two_m, selfw = prepared
-    else:
-        edges, deg, two_m, selfw = louvain_prepare(edges)
-    const = 1.0 / two_m if two_m > 0 else 0.0
-    level = _ckpt_level()
-    nblocks = spark.sparkContext.defaultParallelism
-
-    curr = cut_lineage(louvain_init(edges, deg, const))
-    vattr = deg.join(selfw, "vid", "left").select(
-        "vid", "degree", F.coalesce("self_w", F.lit(0.0)).alias("self_w")
-    )
-    init_ck = curr
-    curr2 = cut_lineage(curr.join(vattr, "vid"))
-    release(init_ck)
-    backing = curr2          # materialized assignment BEFORE the open batch
-    prev_final = curr2       # assignment the next sweep will read
-
-    prev_mod = -1.0
-    change = False
-    num_iters = 0
-    trajectory = []
-    stopped = False
-    final_read = curr2
-
-    while not stopped:
-        batch = []       # (obs, target) per sweep of this batch
-        persisted = []
-        while True:
-            num_iters += 1
-            info = (
-                curr2.filter(F.col("comm") >= 0)
-                .groupBy("comm")
-                .agg(F.count("*").alias("c_size"),
-                     F.sum("degree").alias("c_degree"))
-            )
-            state = curr2.join(info, "comm").select(
-                "vid", F.col("comm").alias("sc"), "degree", "self_w",
-                F.col("c_degree").alias("ax_full"),
-                F.col("c_size").alias("size_sc"),
-            ).persist(level)
-            cdst2 = state.select(
-                F.col("vid").alias("dst"), F.col("sc").alias("comm_dst"),
-                F.col("ax_full").alias("ay"), F.col("size_sc").alias("size_y"),
-            )
-            msg = edges.join(cdst2, "dst")
-            if kernel_agg and not hub_salt:
-                cand = msg.select("src", "weight", "comm_dst", "ay", "size_y")
-            elif hub_salt:
-                salt = F.pmod(F.xxhash64(F.col("dst").cast("long")), F.lit(hub_salt))
-                cand = (
-                    msg.groupBy("src", "comm_dst", salt.alias("_salt"))
-                    .agg(F.sum("weight").alias("eiy"),
-                         F.first("ay").alias("ay"),
-                         F.first("size_y").alias("size_y"))
-                    .groupBy("src", "comm_dst")
-                    .agg(F.sum("eiy").alias("eiy"),
-                         F.first("ay").alias("ay"),
-                         F.first("size_y").alias("size_y"))
-                )
-            else:
-                cand = (
-                    msg.groupBy("src", "comm_dst")
-                    .agg(F.sum("weight").alias("eiy"),
-                         F.first("ay").alias("ay"),
-                         F.first("size_y").alias("size_y"))
-                )
-            obs = Observation()
-            target = (
-                _apply_sampling(
-                    _sweep_arrow_cogrouped(
-                        cand, state, const, nblocks,
-                        raw=kernel_agg and not hub_salt,
-                    ),
-                    sample_pct, num_iters,
-                )
-                .observe(
-                    obs,
-                    F.sum("own_w").alias("e_xx"),
-                    F.sum(
-                        F.when(F.col("comm") != F.col("sc"), 1).otherwise(0)
-                    ).alias("moved"),
-                    F.sum("_a2t").alias("a2_x"),
-                )
-                .select("vid", "comm", "sc", "own_w", "degree", "self_w")
-                .persist(level)
-            )
-            batch.append((obs, target))
-            persisted += [state, target]
-            curr2 = target.select("vid", "comm", "degree", "self_w")
-            if num_iters % max(1, chain_sweeps) == 0 or num_iters >= max_inner:
-                break
-
-        # ONE action runs the whole batch; every persist above caches
-        batch[-1][1].count()
-        base_iter = num_iters - len(batch)
-        for j, (obs, target) in enumerate(batch):
-            stats = obs.get
-            curr_mod = (
-                (stats["e_xx"] or 0.0) * const
-                - (stats["a2_x"] or 0.0) * const * const
-            )
-            trajectory.append(curr_mod)
-            moved = stats["moved"] or 0
-            gi = base_iter + j + 1
-            if moved > 0:
-                change = True
-            if moved == 0 or gi >= max_inner:
-                # unchained loop returns the assignment the FINAL sweep
-                # READ (it breaks before curr = target); on moved == 0
-                # that equals the final target anyway
-                num_iters = gi
-                trajectory = trajectory[:gi]
-                final_read = prev_final if j == 0 else batch[j - 1][1]
-                stopped = True
-                break
-            prev_mod = max(curr_mod, lower)
-        if not stopped:
-            # batch boundary: truncate lineage so stats/plan depth cannot
-            # compound, then free the batch's cached blocks
-            new_backing = cut_lineage(curr2)
-            release(backing)
-            for p in persisted:
-                p.unpersist()
-            backing = new_backing
-            prev_final = new_backing
-            curr2 = new_backing
-
-    all_v = spark.range(nv).select(F.col("id").alias("vid"))
-    iso_fill = F.lit(-1) if num_iters >= 2 else F.col("vid")
-    c_full = cut_lineage(
-        all_v.join(final_read.select("vid", "comm"), "vid", "left")
-        .select("vid", F.coalesce("comm", iso_fill).alias("comm"))
-    )
-    for p in persisted:
-        p.unpersist()
-    release(backing)
     return PhaseResult(c_full, prev_mod, num_iters, change, trajectory)
 
 
@@ -1295,10 +785,7 @@ def louvain(
     checkpoint=None,
     driver_tail_nv: int = 262_144,
     driver_tail_edges: int = 2_000_000,
-    method: str = "dataframe",
     hub_salt: int | None = None,
-    kernel_agg: bool = False,
-    active_prune: float | None = None,
 ) -> LouvainResult:
     """Multi-phase Louvain (``runMultiPhaseBasic.cpp:66-204`` semantics).
 
@@ -1318,10 +805,10 @@ def louvain(
     Set ``driver_tail_nv=0`` to force fully-distributed phases.
 
     Driver memory bound: the tail collects at most ``driver_tail_edges``
-    (src, dst, weight) tuples — ~150 B/row boxed (tuple + two ints +
-    float) ≈ 300 MB at the 2M default, roughly doubled transiently by the
-    ``collect()``-time Row objects — plus the numpy CSR the oracle builds
-    (~50 MB). The EDGE ceiling is the binding memory bound; the nv
+    (src, dst, weight) rows as one Arrow table (24 B/row, ~48 MB at the
+    2M default), unpacked into the oracle's tuples — ~150 B/row boxed
+    (tuple + two ints + float) ≈ 300 MB — plus the numpy CSR the oracle
+    builds (~50 MB). The EDGE ceiling is the binding memory bound; the nv
     ceiling (a few numpy int64 arrays — ~2 MB at the 262k default) only
     guards pathological edgeless graphs, so it is set well above typical
     phase-2 cluster counts: on the 61M-row anchor corpus the old 16k nv
@@ -1346,8 +833,7 @@ def louvain(
         res = louvain_phase(
             spark, g_edges, g_nv, lower=curr_mod, max_inner=max_inner,
             checkpoint=checkpoint, phase_tag=f"louvain_phase_{phase}",
-            method=method, hub_salt=hub_salt, kernel_agg=kernel_agg,
-            active_prune=active_prune,
+            hub_salt=hub_salt,
         )
         curr_mod = res.modularity
         tot_iters += res.num_iters
@@ -1377,14 +863,17 @@ def louvain(
             g_nv = num_clusters
             phase += 1
             if g_nv <= driver_tail_nv and g_edges.count() <= driver_tail_edges:
-                rows = [(r["src"], r["dst"], r["weight"]) for r in g_edges.collect()]
+                t = g_edges.select("src", "dst", "weight").toArrow()
+                rows = list(zip(t["src"].to_pylist(), t["dst"].to_pylist(),
+                                t["weight"].to_pylist()))
+                del t
                 tail = louvain_multiphase_np(
                     rows, g_nv, threshold=threshold,
                     max_phases=max_phases - phase + 1,
                     max_inner=max_inner, init_mod=curr_mod,
                 )
-                proj = spark.createDataFrame(
-                    list(enumerate(tail["C"])), "comm_prev long, comm_new long"
+                proj = local_table(
+                    spark, list(enumerate(tail["C"])), "comm_prev long, comm_new long"
                 )
                 c_orig = (
                     c_orig.withColumnRenamed("comm", "comm_prev")

@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..lineage import cut_lineage, pin_partitioned, release
-from ..session import scaled_shuffle_partitions
+from ..session import local_table, scaled_shuffle_partitions
 from .louvain import _gain, coarsen, renumber
 
 
@@ -388,7 +388,8 @@ def resistance_sweep_stats(
         spark, edges, nv, const_factor=1.0, thresh=-1e18, lower=-1.0,
         max_inner=sweeps, resistance_phase=2, force_sweeps=True,
     )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(r["it"], r["sum_size_sq"], r["curr_mod"], r["r_min"], r["q_afg"])
          for r in res.res_traj],
         "it long, sum_size_sq long, curr_mod double, r_min double, q_afg double",

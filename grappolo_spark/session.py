@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -85,6 +85,32 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """DataFrame over driver-built ``rows`` (tuples) with the exact Spark
+    schema of ``ddl`` — the same result as ``spark.createDataFrame(rows,
+    ddl)``, planned as a ``LocalTableScan``.
+
+    The list path pickles the rows into a ``parallelize`` RDD, so every
+    consumer runs a Python-worker stage (one task per default-parallelism
+    slot) just to read a few dozen driver values. An Arrow table is
+    shipped to the JVM once and becomes a local relation: no Python
+    worker, no extra job. Every engine site that builds a DataFrame from
+    a Python list goes through here (pinned by tests/test_local_table.py).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 from contextlib import contextmanager  # noqa: E402

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import assign_dense_ids, remove_edges, symmetrize
+from ..session import local_table
 
 
 def _finish(directed: DataFrame) -> DataFrame:
@@ -121,9 +122,7 @@ def read_metis(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
             else:
                 for j in toks:
                     rows.append((i, int(j) - 1, 1.0))
-    df = spark.createDataFrame(rows or [(0, 0, 0.0)], "src long, dst long, weight double")
-    if not rows:
-        df = df.limit(0)
+    df = local_table(spark, rows, "src long, dst long, weight double")
     # metis lists each undirected edge from both endpoints already
     return remove_edges(df, drop_self_loops=False).localCheckpoint(eager=True), nv
 
@@ -150,9 +149,7 @@ def read_matrix_market(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
             u, v = int(toks[0]) - 1, int(toks[1]) - 1
             w = 1.0 if pattern else float(toks[2])
             rows.append((u, v, w))
-    df = spark.createDataFrame(rows or [(0, 0, 0.0)], "src long, dst long, weight double")
-    if not rows:
-        df = df.limit(0)
+    df = local_table(spark, rows, "src long, dst long, weight double")
     # symmetric MM stores each entry once; general may hold both — _finish
     # canonicalizes either into the engine contract
     return _finish(df).localCheckpoint(eager=True), nv
@@ -185,9 +182,7 @@ def read_pajek(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
             if u == v:
                 continue
             rows.append((u, v, 1.0))
-    df = spark.createDataFrame(rows or [(0, 0, 0.0)], "src long, dst long, weight double")
-    if not rows:
-        df = df.limit(0)
+    df = local_table(spark, rows, "src long, dst long, weight double")
     return _finish(df).localCheckpoint(eager=True), nv
 
 

@@ -148,14 +148,9 @@ def main():
     ref = run_reference(binary, metis, threads)
     print(f"reference ({threads}T, Modified Parallel/SFP): {ref}", flush=True)
 
-    # engine: same full multi-phase driver the bench times, to convergence.
-    # SPARK_GRAFT_ACTIVE_PRUNE (a moved-fraction threshold, e.g. 0.05)
-    # switches on exact active-vertex pruning of the arrow sweeps — the
-    # VERDICT r4 #5 lever; empty/unset = the unpruned baseline path.
-    prune_env = os.environ.get("SPARK_GRAFT_ACTIVE_PRUNE", "")
-    active_prune = float(prune_env) if prune_env else None
+    # engine: same full multi-phase driver the bench times, to convergence
     t0 = time.time()
-    res = louvain(spark, edges, nv, method="arrow", active_prune=active_prune)
+    res = louvain(spark, edges, nv)
     res.c.count()
     eng_wall = time.time() - t0
     eng = {
@@ -165,9 +160,7 @@ def main():
         "num_clusters": res.num_clusters,
         "modularity": round(res.modularity, 6),
     }
-    if active_prune is not None:
-        eng["active_prune"] = active_prune
-    print(f"engine (local[{threads}], arrow multi-phase): {eng}", flush=True)
+    print(f"engine (local[{threads}], multi-phase): {eng}", flush=True)
 
     dq = (ref["modularity"] - eng["modularity"]
           if ref.get("modularity") is not None else None)

@@ -16,6 +16,7 @@ Usage: python scripts/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import pathlib
+import re
 import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
@@ -171,6 +172,11 @@ def main():
          lambda p: "SinglePartition" not in p),
         ("per-partition rank window keyed on _pid (not a global window)",
          lambda p: "_pid" in p),
+        # the driver-built offsets table must be an Arrow local relation:
+        # a list-built createDataFrame plans as a Python-worker RDD scan
+        ("per-partition offsets side is a LocalTableScan",
+         lambda p: re.search(r"LocalTableScan\n\s*Output \[2\]: "
+                              r"\[_pid#\d+, _offset#\d+L\]", p) is not None),
     ], execute=True)
 
     # 6. Python-boundary discipline: the north rule requires vectorized
@@ -182,13 +188,11 @@ def main():
     ok = "BatchEvalPython" not in all_plans
     checks.append(("python_boundary", "no BatchEvalPython in any audited plan", ok))
     print(f"{'PASS' if ok else 'FAIL'}  python_boundary: no BatchEvalPython in any audited plan")
-    import re as _re
-
     src_hits = [
         f"{py.relative_to(REPO)}:{i}"
         for py in sorted((REPO / "grappolo_spark").rglob("*.py"))
         for i, line in enumerate(py.read_text().splitlines(), 1)
-        if _re.search(r"(^|[^\w.])(F\.)?udf\(|@udf\b|\.udf\.register\(", line)
+        if re.search(r"(^|[^\w.])(F\.)?udf\(|@udf\b|\.udf\.register\(", line)
     ]
     ok = not src_hits
     checks.append(("python_boundary", "no row-wise UDF registration in package source", ok))

@@ -11,18 +11,35 @@ spark-submit --py-files package).
 ``--transcripts`` reads any Parquet/Iceberg path with the transcript
 schema (conv_id, turn_idx, role, text, tool, ts); ``--synth N`` generates
 the deterministic corpus instead (N conversations). The session is
-whatever the cluster provides (master/conf come from spark-submit); local
-runs fall back to the repo's local[] factory.
+built by the engine's ``get_spark()`` (Arrow exchange, AQE); a master set
+by spark-submit is passed through, and a bare ``python`` run falls back to
+its ``local[$SPARK_GRAFT_CPUS]`` default.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark import SparkConf, SparkContext
+
+
+def submitted_master() -> str | None:
+    """The master spark-submit set, or None for a bare ``python`` run.
+
+    spark-submit starts the driver JVM first and hands its gateway to this
+    process in ``PYSPARK_GATEWAY_PORT``; its ``--master`` is then a JVM
+    system property, which a JVM-backed ``SparkConf`` loads. Without that
+    gateway no JVM exists yet, and starting one here would launch it
+    before ``get_spark`` could size the driver.
+    """
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
 
 
 def main() -> None:
@@ -39,11 +56,12 @@ def main() -> None:
     ap.add_argument("--tol", type=float, default=1e-9)
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName(f"grappolo-{args.algo}").getOrCreate()
-
     from grappolo_spark.checkpoint import CheckpointManager
     from grappolo_spark.etl import build_edges
+    from grappolo_spark.session import get_spark
     from grappolo_spark.synth import synth_transcripts
+
+    spark = get_spark(f"grappolo-{args.algo}", master=submitted_master())
 
     tr = (synth_transcripts(spark, n_convs=args.synth) if args.synth
           else spark.read.parquet(args.transcripts))

@@ -245,7 +245,10 @@ def main():
                         r = run_at(cpus, convs, probe=True)
                         print(f"  {r}", flush=True)
                         amort.setdefault((cpus, convs), []).append(r)
-        except RuntimeError as exc:
+        except (RuntimeError, subprocess.TimeoutExpired,
+                json.JSONDecodeError, IndexError) as exc:
+            # a leg that died, hung past its timeout, or printed no
+            # parseable JSON record
             print(f"amortization section failed — recording the window "
                   f"headline-only: {exc}", flush=True)
             amort = {}
@@ -701,11 +704,39 @@ partition-count sweeps on the no-better list. The per-stage scheduling
 constant is exactly the term that (a) shrinks as edge-work per
 superstep grows (amortization section) and (b) a real multi-executor
 cluster amortizes across executors, while the binary's shared-memory
-model cannot leave one node. The knob stays available (``active_prune=``
-on ``louvain_phase``/``louvain``, ``SPARK_GRAFT_ACTIVE_PRUNE`` on the
-anchor) — on a 1000-executor cluster the data-proportional term IS
-dominant and the same exact pruning applies unchanged; it is
-default-off for single-box runs.
+model cannot leave one node. The knob (``active_prune=`` on
+``louvain_phase``/``louvain``, ``SPARK_GRAFT_ACTIVE_PRUNE`` on the
+anchor) and the per-sweep trace were later deleted along with the
+DataFrame sweep, sweep-chaining, state-fusing and kernel-side
+aggregation: the Arrow cogroup sweep is the engine's one Louvain sweep.
+
+### Deleted sweep knobs
+
+The Arrow cogroup sweep is now the only Louvain sweep. Every knob on
+the no-better list above was deleted with the DataFrame sweep; the
+measurements that closed each one stay here:
+
+- ``method="dataframe"`` (whole-stage-codegen join/agg sweep): 35.4-42.2s
+  and 161 jobs for 5 sweeps on the sf0.1 co-purchase graph (4 cores),
+  against 16.0-17.5s and 66 jobs on the Arrow sweep, same modularity.
+  Deleted; ``method=`` is gone from ``louvain_phase`` and ``louvain``.
+- ``active_prune`` (exact active-vertex pruning): 501.9s / 462.2s at
+  thresholds 0.25 / 0.05 against a 329.3s unpruned control (round-5
+  section above). Deleted, with ``SPARK_GRAFT_ACTIVE_PRUNE`` and the
+  ``SPARK_GRAFT_SWEEP_TRACE`` per-sweep print.
+- ``fuse_state`` (leave the per-sweep state table lazy): 0.38-0.99x
+  pairwise in an interleaved A/B at 61M edge rows / local[32]. AQE
+  already runs every exchange as its own stage-job, and column pruning
+  defeats exchange reuse, so the |V|-scale state computes twice.
+  Deleted, with ``scripts/lv_fuse_probe.py``.
+- ``chain_sweeps`` (lazily chained sweep batches): karate 17s -> 59s
+  (chain 1 -> 2) and 166s -> 182s on the 61M-row bench corpus. Each
+  sweep reads its state twice, so a k-sweep chain plans a 2^k-path tree.
+  Deleted.
+- ``kernel_agg`` (in-kernel (src, comm_dst) reduction): ~8x slower
+  sweeps than the JVM hash aggregation at 61M edge rows, because the
+  raw |E|-row message stream crosses into Python without map-side
+  combine. Deleted, with ``SPARK_GRAFT_KERNEL_AGG``.
 
 Note on window quality: the round-5 anchor window was markedly degraded
 and uneven (binary 69-81s vs 64.5s in r4; engine unpruned 329s vs 229s

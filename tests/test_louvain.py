@@ -30,26 +30,12 @@ def _collect_c(df, nv):
 
 
 @pytest.mark.parametrize("name", PHASE_FIXTURES)
-@pytest.mark.parametrize(
-    "method",
-    ["dataframe", "arrow", "arrow+kernel_agg", "arrow+fuse", "arrow+prune"],
-)
-def test_phase_exact(spark, name, method):
-    # arrow+prune: active-vertex pruning at threshold 1.0 engages on every
-    # sweep after the first whenever its guards admit — the pruned sweeps
-    # must stay bit-exact (assignment AND trajectory) vs the oracle
+def test_phase_exact(spark, name):
     edges, nv = fx.ALL_FIXTURES[name]()
     rows = fx.symmetric_rows(edges)
     df = fx.to_spark_edges(spark, edges)
     exp_c, exp_mod, exp_iters, exp_change, exp_traj = louvain_phase_np(rows, nv)
-    kw = {}
-    if method == "arrow+kernel_agg":
-        kw["kernel_agg"] = True
-    elif method == "arrow+fuse":
-        kw["fuse_state"] = True
-    elif method == "arrow+prune":
-        kw["active_prune"] = 1.0
-    res = louvain_phase(spark, df, nv, method=method.split("+")[0], **kw)
+    res = louvain_phase(spark, df, nv)
     assert _collect_c(res.c, nv) == exp_c, name
     assert res.modularity == exp_mod, name
     assert res.num_iters == exp_iters
@@ -106,35 +92,3 @@ def test_modularity_matches_oracle(spark):
     df = fx.to_spark_edges(spark, edges)
     cdf = spark.createDataFrame(list(enumerate(c)), "vid long, comm long")
     assert abs(modularity_spark(df, cdf) - exp) < 1e-15
-
-
-@pytest.mark.parametrize("name", PHASE_FIXTURES)
-@pytest.mark.parametrize("chain", [2, 4])
-def test_phase_chained_exact(spark, name, chain):
-    """chain_sweeps batches must reproduce the unchained arrow phase
-    bit-exactly — including num_iters/trajectory truncation when the
-    fixed point lands mid-batch (chain=4 > num_iters on most of these
-    fixtures exercises exactly that path)."""
-    edges, nv = fx.ALL_FIXTURES[name]()
-    rows = fx.symmetric_rows(edges)
-    df = fx.to_spark_edges(spark, edges)
-    exp_c, exp_mod, exp_iters, exp_change, exp_traj = louvain_phase_np(rows, nv)
-    res = louvain_phase(spark, df, nv, method="arrow", chain_sweeps=chain)
-    assert _collect_c(res.c, nv) == exp_c, name
-    assert res.modularity == exp_mod, name
-    assert res.num_iters == exp_iters
-    assert res.change == exp_change
-    assert res.trajectory == exp_traj
-
-
-def test_phase_chained_max_inner_budget(spark):
-    """Fixed-budget mode (the bench headline shape): chained and unchained
-    must agree when the budget stops the phase before convergence."""
-    edges, nv = fx.ALL_FIXTURES["karate"]()
-    df = fx.to_spark_edges(spark, edges)
-    base = louvain_phase(spark, df, nv, method="arrow", max_inner=5)
-    got = louvain_phase(spark, df, nv, method="arrow", max_inner=5,
-                        chain_sweeps=5)
-    assert _collect_c(got.c, nv) == _collect_c(base.c, nv)
-    assert got.num_iters == base.num_iters
-    assert got.trajectory == base.trajectory

@@ -66,15 +66,14 @@ def test_hub_salted_phase_matches_oracle(spark, name):
     assert res.num_iters == exp_iters
 
 
-@pytest.mark.parametrize("method", ["dataframe", "arrow"])
-def test_approx_phase_matches_oracle(spark, method):
+def test_approx_phase_matches_oracle(spark):
     edges, nv = fx.karate()
     rows = fx.symmetric_rows(edges)
     df = fx.to_spark_edges(spark, edges)
     exp_c, exp_mod, exp_iters, _, exp_traj = louvain_phase_np(
         rows, nv, sample_pct=70
     )
-    res = louvain_phase(spark, df, nv, method=method, sample_pct=70)
+    res = louvain_phase(spark, df, nv, sample_pct=70)
     assert _collect(res.c, "comm", nv) == exp_c
     assert res.trajectory == exp_traj
     assert res.modularity == exp_mod
