@@ -343,6 +343,7 @@ def louvain_phase(
     sample_pct: float | None = None,
     hub_salt: int | None = None,
     prepared: tuple[DataFrame, DataFrame, float, DataFrame] | None = None,
+    fuse_state: bool = False,
 ) -> PhaseResult:
     """One Louvain phase with exact reference SFP-path semantics.
 
@@ -377,9 +378,19 @@ def louvain_phase(
     values are identical for integer-valued weights (float64-exact); AQE's
     skew-join handling covers the join side either way.
 
+    ``fuse_state``: leave the per-sweep state table lazy instead of
+    materializing it between its two consumers (the message join and the
+    cogroup). Measured no better at 61M edge rows / local[32] (0.38-0.99x
+    pairwise, BENCH.md): column pruning specializes the two state
+    instances differently, so the |V|-scale subtree computes twice. Kept
+    for clusters where a |V|-row checkpoint per sweep is the scarcer
+    resource. Bit-identical either way.
+
     With a ``checkpoint`` manager each sweep's assignment lands in
     Parquet + manifest under ``phase_tag``, and a rerun resumes from the
-    latest saved sweep.
+    latest saved sweep — with the modularity and ``change`` flag that
+    sweep left, so a phase run as a chain of resumed segments returns
+    what the uninterrupted phase returns.
     """
     if prepared is None:
         # size stage granularity to THIS graph for the whole phase (incl.
@@ -393,18 +404,24 @@ def louvain_phase(
                 spark, edges, nv, lower=lower, max_inner=max_inner,
                 checkpoint=checkpoint, phase_tag=phase_tag,
                 sample_pct=sample_pct, hub_salt=hub_salt,
-                prepared=louvain_prepare(edges),
+                prepared=louvain_prepare(edges), fuse_state=fuse_state,
             )
     edges, deg, two_m, selfw = prepared
     const = 1.0 / two_m if two_m > 0 else 0.0
 
     start_iter = 0
     curr = None
+    prev_mod = -1.0
+    change = False
     if checkpoint is not None:
         state = checkpoint.load_latest(phase_tag)
         if state is not None:
             curr = state.dataframes["c"]
             start_iter = state.meta["iteration"]
+            # a sweep is saved only when it moved vertices and the phase
+            # went on: restore the floor and flag it left behind
+            prev_mod = max(state.meta["modularity"], lower)
+            change = state.meta["moved"] > 0
     if curr is None:
         curr = louvain_init(edges, deg, const)
     init_ck = curr.transform(cut_lineage)
@@ -420,8 +437,6 @@ def louvain_phase(
     curr_backing = curr2  # checkpoint behind the current assignment
     release(init_ck)
 
-    prev_mod = -1.0
-    change = False
     num_iters = start_iter
     trajectory = []
     nblocks = spark.sparkContext.defaultParallelism
@@ -444,13 +459,14 @@ def louvain_phase(
         # job via the kernel's _a2t column, so the state table needs no
         # observation of its own; the state materialization exists so its
         # two consumers (the message join and the cogroup) share one
-        # computation — left lazy, column pruning specializes the two
-        # instances differently and the |V|-scale subtree computes twice.
-        state = cut_lineage(curr2.join(info, "comm").select(
+        # computation (see fuse_state above).
+        state = curr2.join(info, "comm").select(
             "vid", F.col("comm").alias("sc"), "degree", "self_w",
             F.col("c_degree").alias("ax_full"),
             F.col("c_size").alias("size_sc"),
-        ))
+        )
+        if not fuse_state:
+            state = cut_lineage(state)
         cdst2 = state.select(
             F.col("vid").alias("dst"), F.col("sc").alias("comm_dst"),
             F.col("ax_full").alias("ay"), F.col("size_sc").alias("size_y"),

@@ -707,14 +707,14 @@ cluster amortizes across executors, while the binary's shared-memory
 model cannot leave one node. The knob (``active_prune=`` on
 ``louvain_phase``/``louvain``, ``SPARK_GRAFT_ACTIVE_PRUNE`` on the
 anchor) and the per-sweep trace were later deleted along with the
-DataFrame sweep, sweep-chaining, state-fusing and kernel-side
-aggregation: the Arrow cogroup sweep is the engine's one Louvain sweep.
+DataFrame sweep, sweep-chaining and kernel-side aggregation: the
+Arrow cogroup sweep is the engine's one Louvain sweep.
 
 ### Deleted sweep knobs
 
 The Arrow cogroup sweep is now the only Louvain sweep. Every knob on
-the no-better list above was deleted with the DataFrame sweep; the
-measurements that closed each one stay here:
+the no-better list above but ``fuse_state`` was deleted with the
+DataFrame sweep; the measurements that closed each one stay here:
 
 - ``method="dataframe"`` (whole-stage-codegen join/agg sweep): 35.4-42.2s
   and 161 jobs for 5 sweeps on the sf0.1 co-purchase graph (4 cores),
@@ -728,7 +728,8 @@ measurements that closed each one stay here:
   pairwise in an interleaved A/B at 61M edge rows / local[32]. AQE
   already runs every exchange as its own stage-job, and column pruning
   defeats exchange reuse, so the |V|-scale state computes twice.
-  Deleted, with ``scripts/lv_fuse_probe.py``.
+  Still an option of the one sweep (off by default; its deletion is
+  left to a later change); ``scripts/lv_fuse_probe.py`` is deleted.
 - ``chain_sweeps`` (lazily chained sweep batches): karate 17s -> 59s
   (chain 1 -> 2) and 166s -> 182s on the 61M-row bench corpus. Each
   sweep reads its state twice, so a k-sweep chain plans a 2^k-path tree.

@@ -8,6 +8,7 @@ here chains to reference parity.
 import pytest
 
 from grappolo_spark import fixtures as fx
+from grappolo_spark.checkpoint import CheckpointManager
 from grappolo_spark.operators.louvain import (
     louvain, louvain_phase, renumber, coarsen,
 )
@@ -29,13 +30,42 @@ def _collect_c(df, nv):
     return [got[i] for i in range(nv)]
 
 
+def _edges(spark, edges, build):
+    """Edge table built as an Arrow local relation ("arrow", the engine's
+    ``local_table``) or through ``createDataFrame(list, ddl)``'s Python
+    RDD scan ("dataframe"); the sweep must not care which."""
+    if build == "dataframe":
+        return spark.createDataFrame(fx.symmetric_rows(edges),
+                                     "src long, dst long, weight double")
+    return fx.to_spark_edges(spark, edges)
+
+
+def _phase_in_segments(spark, df, nv, seg, ckdir, max_inner=25):
+    """One phase run as a chain of checkpoint-resumed calls, each allowed
+    ``seg`` more sweeps than the last; the trajectory is stitched from the
+    segments (a resumed call re-runs the sweeps after the last saved one)."""
+    cp = CheckpointManager(spark, str(ckdir))
+    traj = []
+    budget = 0
+    while True:
+        budget = min(budget + seg, max_inner)
+        res = louvain_phase(spark, df, nv, max_inner=budget, checkpoint=cp)
+        start = res.num_iters - len(res.trajectory)
+        traj = traj[:start] + res.trajectory
+        if res.num_iters < budget or budget == max_inner:
+            return res, traj
+
+
 @pytest.mark.parametrize("name", PHASE_FIXTURES)
-def test_phase_exact(spark, name):
+@pytest.mark.parametrize("method", ["dataframe", "arrow", "arrow+fuse"])
+def test_phase_exact(spark, name, method):
+    # the method id names how the input edges were built; "+fuse" runs
+    # the sweep with its state table left lazy (fuse_state)
     edges, nv = fx.ALL_FIXTURES[name]()
     rows = fx.symmetric_rows(edges)
-    df = fx.to_spark_edges(spark, edges)
+    df = _edges(spark, edges, method.split("+")[0])
     exp_c, exp_mod, exp_iters, exp_change, exp_traj = louvain_phase_np(rows, nv)
-    res = louvain_phase(spark, df, nv)
+    res = louvain_phase(spark, df, nv, fuse_state=method.endswith("+fuse"))
     assert _collect_c(res.c, nv) == exp_c, name
     assert res.modularity == exp_mod, name
     assert res.num_iters == exp_iters
@@ -92,3 +122,37 @@ def test_modularity_matches_oracle(spark):
     df = fx.to_spark_edges(spark, edges)
     cdf = spark.createDataFrame(list(enumerate(c)), "vid long, comm long")
     assert abs(modularity_spark(df, cdf) - exp) < 1e-15
+
+
+@pytest.mark.parametrize("name", PHASE_FIXTURES)
+@pytest.mark.parametrize("chain", [2, 4])
+def test_phase_chained_exact(spark, tmp_path, name, chain):
+    """A phase run as a chain of checkpoint-resumed segments of ``chain``
+    sweeps must reproduce the uninterrupted phase bit-exactly — including
+    modularity and ``change`` when a segment's resume point sits right
+    before the fixed point (chain=4 > num_iters on most of these fixtures
+    exercises the single-segment path)."""
+    edges, nv = fx.ALL_FIXTURES[name]()
+    rows = fx.symmetric_rows(edges)
+    df = fx.to_spark_edges(spark, edges)
+    exp_c, exp_mod, exp_iters, exp_change, exp_traj = louvain_phase_np(rows, nv)
+    res, traj = _phase_in_segments(spark, df, nv, chain, tmp_path / "ck")
+    assert _collect_c(res.c, nv) == exp_c, name
+    assert res.modularity == exp_mod, name
+    assert res.num_iters == exp_iters
+    assert res.change == exp_change
+    assert traj == exp_traj
+
+
+def test_phase_chained_max_inner_budget(spark, tmp_path):
+    """Fixed-budget mode (the bench headline shape): chained and unchained
+    must agree when the budget stops the phase before convergence."""
+    edges, nv = fx.ALL_FIXTURES["karate"]()
+    df = fx.to_spark_edges(spark, edges)
+    base = louvain_phase(spark, df, nv, max_inner=5)
+    got, traj = _phase_in_segments(spark, df, nv, 2, tmp_path / "ck",
+                                   max_inner=5)
+    assert _collect_c(got.c, nv) == _collect_c(base.c, nv)
+    assert got.modularity == base.modularity
+    assert got.num_iters == base.num_iters
+    assert traj == base.trajectory

@@ -66,10 +66,16 @@ def test_hub_salted_phase_matches_oracle(spark, name):
     assert res.num_iters == exp_iters
 
 
-def test_approx_phase_matches_oracle(spark):
+@pytest.mark.parametrize("method", ["dataframe", "arrow"])
+def test_approx_phase_matches_oracle(spark, method):
+    # the method id names how the input edges were built: through
+    # createDataFrame(list, ddl) or as an Arrow local relation
     edges, nv = fx.karate()
     rows = fx.symmetric_rows(edges)
-    df = fx.to_spark_edges(spark, edges)
+    if method == "dataframe":
+        df = spark.createDataFrame(rows, "src long, dst long, weight double")
+    else:
+        df = fx.to_spark_edges(spark, edges)
     exp_c, exp_mod, exp_iters, _, exp_traj = louvain_phase_np(
         rows, nv, sample_pct=70
     )
