@@ -786,10 +786,12 @@ DIRECTED_SWEEPS = 4  # fixed budget so the DuckDB twin unrolls the same chain
 
 
 def _q_directed_louvain_sweeps(spark, sf):
-    """Hard DuckDB gate for the base-path variant sweep kernel (directed
-    Louvain, ref C8): the co-purchase graph oriented high->low (local-
-    minimum parts become sinks, exercising the reference's community-slot
-    bookkeeping — ``_slots_info``), run for exactly ``DIRECTED_SWEEPS``
+    """Hard DuckDB gate for the base-path variant phase (directed
+    Louvain, ref C8), whose sweeps are the engine's one sweep kernel
+    (``louvain_sweep``) with the out-row vertices as movers: the
+    co-purchase graph oriented high->low (local-minimum parts become
+    sinks, exercising the reference's community-slot bookkeeping —
+    ``_slots_info`` as the sweep's info), run for exactly ``DIRECTED_SWEEPS``
     sweeps with the threshold stop disabled. Twin:
     ``oracle/louvain_sql.directed_sweeps_sql`` (validated vs the numpy
     oracle in test_directed_sql_twin.py on sink-heavy fixtures)."""

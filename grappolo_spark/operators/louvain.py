@@ -4,13 +4,17 @@ Re-expresses the reference's default dispatch path — ``runMultiPhaseBasic``
 (``runMultiPhaseBasic.cpp:66-204``) over ``parallelLouvianMethod_SFP``
 (``vectorizedLouvainMethod.cpp:48-371``) — as Spark jobs:
 
-* one local-move sweep = the Arrow cogroup sweep, the engine's one sweep
-  (``louvain_phase``): community info + state table → message join on
-  dst (the target community's degree/size ride each message) → JVM
-  (src, comm_dst) weight aggregation → cogrouped numpy kernel doing the
-  gain argmax, min-cid tie-break and singleton swap protection per
-  vertex block — the twin of the reference's AVX-512 gain argmax
-  (SURVEY §2.10). No per-row Python: the kernel sees whole Arrow blocks;
+* one local-move sweep = ``louvain_sweep``, the engine's one gain/argmax:
+  community info + checkpointed state table → message join on dst (the
+  target community's degree/size ride each message) → JVM (src,
+  comm_dst) weight aggregation → cogrouped numpy kernel doing the gain
+  argmax, min-cid tie-break and singleton swap protection per vertex
+  block — the twin of the reference's AVX-512 gain argmax (SURVEY
+  §2.10). No per-row Python: the kernel sees whole Arrow blocks. Every
+  Louvain phase runs it: the basic phase (``louvain_phase``), the
+  color-staged phase (one sweep per colour class, the class as the
+  mover set) and the directed/resistance base phase
+  (``louvain_variants``, the vertices with out-rows as the mover set);
 * Jacobi snapshot semantics (``parallelLouvainMethod.cpp:146-236``) are the
   *default* with immutable DataFrames: every sweep reads the iteration-start
   ``C``/``commInfo`` and moves are applied after the sweep;
@@ -41,9 +45,6 @@ per-superstep E-scale cost — proportional to |E| like the reference's
 edge visits. Community info shrinks with every phase. Lineage is cut
 every iteration via ``localCheckpoint``; with a CheckpointManager the
 sweep state also lands in Parquet + manifest so runs resume mid-phase.
-
-The color-staged phase (``louvain_phase_colored``) keeps its own
-DataFrame sweep: its Gauss-Seidel class loop is a different schedule.
 """
 
 from __future__ import annotations
@@ -61,20 +62,6 @@ from ..session import local_table, scaled_shuffle_partitions
 # ---------------------------------------------------------------------------
 # building blocks
 # ---------------------------------------------------------------------------
-
-def comm_info(c: DataFrame, deg: DataFrame) -> DataFrame:
-    """(comm, c_size, c_degree) from an assignment — ref Comm{size,degree}
-    (``defs.h:85-89``); vertices with comm < 0 (isolated) excluded."""
-    return (
-        c.filter(F.col("comm") >= 0)
-        .join(deg, "vid", "left")
-        .groupBy("comm")
-        .agg(
-            F.count("*").alias("c_size"),
-            F.sum(F.coalesce("degree", F.lit(0.0))).alias("c_degree"),
-        )
-    )
-
 
 def renumber(c: DataFrame) -> tuple[DataFrame, int]:
     """Dense contiguous renumber, first-occurrence order (ref W1).
@@ -125,11 +112,16 @@ def coarsen(edges: DataFrame, c: DataFrame) -> DataFrame:
     )
 
 
-def _gain(eiy, eix, deg_i, ay, ax, const):
-    """Reference gain, association order preserved for bit-exactness:
-    ``2*(eiy-eix) - 2*deg_i*(ay-ax)*const`` (``utilityClusteringFunctions.cpp:746``).
-    """
-    return (F.lit(2.0) * (eiy - eix)) - (F.lit(2.0) * deg_i * (ay - ax) * const)
+def project_assignment(c_orig: DataFrame, c: DataFrame) -> DataFrame:
+    """C_orig[i] = C_phase[C_orig[i]] (ref J3, ``runMultiPhaseBasic.cpp:
+    112-124``): map each original vertex through a phase's (vid, comm)
+    assignment of the coarse graph; -1 rows pass through."""
+    proj = c.select(F.col("vid").alias("comm_prev"), F.col("comm").alias("comm_new"))
+    return (
+        c_orig.withColumnRenamed("comm", "comm_prev")
+        .join(proj, "comm_prev", "left")
+        .select("vid", F.coalesce("comm_new", F.col("comm_prev")).alias("comm"))
+    )
 
 
 def _apply_sampling(target, sample_pct, it):
@@ -237,21 +229,74 @@ def _arrow_cogroup_kernel(const: float):
     return sweep
 
 
-def _sweep_arrow_cogrouped(cand, state, const, nblocks):
-    """Build the target assignment with the cogrouped Arrow kernel: one
-    shuffle of each side by vid-block, and the kernel merges candidate
-    and state rows, so no JVM candidate-by-state join exists. ``cand`` is
-    the JVM-aggregated (src, comm_dst, eiy, ay, size_y) table — the hash
-    aggregation's map-side combine keeps the rows crossing into Python
-    at candidate scale, not |E| scale.
+def louvain_sweep(edges, curr, const, nblocks, info=None, movers=None,
+                  hub_salt=None):
+    """One local-move sweep: the engine's one gain/argmax, run by every
+    Louvain phase. Returns ``(state, target)``.
+
+    ``curr`` is the assignment with its static vertex attrs: (vid, comm,
+    degree, self_w, ...). ``info`` is the (comm, c_size, c_degree)
+    community table, by default recomputed from ``curr``'s comm >= 0
+    rows; a row whose comm finds no info row drops out of the sweep —
+    it sends no message and does not move. The state (vid, sc, degree,
+    self_w, ax_full, size_sc) is checkpointed because two consumers read
+    it: the message join on dst, whose rows carry the target community's
+    (ay, size_y), and the cogrouped kernel. The JVM hash aggregation to
+    (src, comm_dst) candidates keeps the rows crossing into Python at
+    candidate scale, not |E| scale; the kernel merges candidate and
+    state rows per vid block, so no JVM candidate-by-state join exists.
+
+    ``movers``: optional boolean column over ``curr`` selecting the state
+    rows the kernel evaluates (a colour class, the vertices with
+    out-rows); every state row still sends messages. Every src of
+    ``edges`` must be a mover. ``hub_salt``: salted two-stage candidate
+    aggregation (see ``louvain_phase``).
+
+    ``target`` is lazy: (vid, comm, sc, own_w, degree, self_w, _a2t), one
+    row per mover. Release ``state`` once ``target`` is materialized.
     """
+    if info is None:
+        info = (
+            curr.filter(F.col("comm") >= 0)
+            .groupBy("comm")
+            .agg(F.count("*").alias("c_size"),
+                 F.sum("degree").alias("c_degree"))
+        )
+    cols = ["vid", F.col("comm").alias("sc"), "degree", "self_w",
+            F.col("c_degree").alias("ax_full"), F.col("c_size").alias("size_sc")]
+    if movers is not None:
+        cols.append(movers.alias("_mover"))
+    state = cut_lineage(curr.join(info, "comm").select(*cols))
+    cdst2 = state.select(
+        F.col("vid").alias("dst"), F.col("sc").alias("comm_dst"),
+        F.col("ax_full").alias("ay"), F.col("size_sc").alias("size_y"),
+    )
+    msg = edges.join(cdst2, "dst")
+    if hub_salt:
+        # two-stage salted aggregation: spread hub keys over hub_salt
+        # reducers before the final combine (GPU degree-bin playbook)
+        salt = F.pmod(F.xxhash64(F.col("dst").cast("long")), F.lit(hub_salt))
+        msg = (
+            msg.groupBy("src", "comm_dst", salt.alias("_salt"))
+            .agg(F.sum("weight").alias("weight"),
+                 F.first("ay").alias("ay"),
+                 F.first("size_y").alias("size_y"))
+        )
+    cand = (
+        msg.groupBy("src", "comm_dst")
+        .agg(F.sum("weight").alias("eiy"),
+             F.first("ay").alias("ay"),
+             F.first("size_y").alias("size_y"))
+    )
+    evaluated = state if movers is None else state.filter("_mover").drop("_mover")
     c = cand.withColumn("block", F.col("src") % F.lit(nblocks))
-    s = state.withColumn("block", F.col("vid") % F.lit(nblocks))
-    return c.groupBy("block").cogroup(s.groupBy("block")).applyInPandas(
+    s = evaluated.withColumn("block", F.col("vid") % F.lit(nblocks))
+    target = c.groupBy("block").cogroup(s.groupBy("block")).applyInPandas(
         _arrow_cogroup_kernel(const),
         "vid long, comm long, sc long, own_w double, degree double,"
         " self_w double, _a2t double",
     )
+    return state, target
 
 
 # ---------------------------------------------------------------------------
@@ -282,10 +327,11 @@ def louvain_init(edges: DataFrame, deg: DataFrame, const: float) -> DataFrame:
         .select(
             "src",
             "dst",
-            _gain(
-                F.col("weight"), F.lit(0.0), F.col("deg_src"), F.col("deg_dst"),
-                F.lit(0.0), F.lit(const),
-            ).alias("gain"),
+            # the reference gain with eix = ax = 0, association order kept
+            # for bit-exactness (``utilityClusteringFunctions.cpp:746``)
+            ((F.lit(2.0) * (F.col("weight") - F.lit(0.0)))
+             - (F.lit(2.0) * F.col("deg_src") * (F.col("deg_dst") - F.lit(0.0))
+                * F.lit(const))).alias("gain"),
         )
     )
     best = (
@@ -343,21 +389,15 @@ def louvain_phase(
     sample_pct: float | None = None,
     hub_salt: int | None = None,
     prepared: tuple[DataFrame, DataFrame, float, DataFrame] | None = None,
-    fuse_state: bool = False,
 ) -> PhaseResult:
     """One Louvain phase with exact reference SFP-path semantics.
 
-    Every sweep is the Arrow cogroup sweep (the reference's own
-    vectorized-path split, ``vectorizedLouvainMethod.cpp``): community
-    info (one groupBy over the state) → state table (checkpointed; read
-    by the message join and the cogroup) → message join on dst, whose
-    rows carry the target community's (ay, size_y) → JVM hash
-    aggregation to (src, comm_dst) candidates → cogrouped numpy gain
-    argmax (``_arrow_cogroup_kernel``) → checkpointed target, with e_xx,
-    moved and Σ c_degree² observed on that same job. Static vertex attrs
-    (degree, self-loop weight) are joined once per phase and ride the
-    state. Assignment and trajectory are bit-identical to
-    ``oracle.louvain_phase_np``.
+    Every sweep is ``louvain_sweep`` over all vertices (the reference's
+    own vectorized-path split, ``vectorizedLouvainMethod.cpp``) →
+    checkpointed target, with e_xx, moved and Σ c_degree² observed on
+    that same job. Static vertex attrs (degree, self-loop weight) are
+    joined once per phase and ride the state. Assignment and trajectory
+    are bit-identical to ``oracle.louvain_phase_np``.
 
     ``sample_pct``: Approx variant (ref C5, ``parallelLouvainMethodApprox.
     cpp:139-155``): only vertices with pmod(xxhash64(vid, iter), 100) <
@@ -378,14 +418,6 @@ def louvain_phase(
     values are identical for integer-valued weights (float64-exact); AQE's
     skew-join handling covers the join side either way.
 
-    ``fuse_state``: leave the per-sweep state table lazy instead of
-    materializing it between its two consumers (the message join and the
-    cogroup). Measured no better at 61M edge rows / local[32] (0.38-0.99x
-    pairwise, BENCH.md): column pruning specializes the two state
-    instances differently, so the |V|-scale subtree computes twice. Kept
-    for clusters where a |V|-row checkpoint per sweep is the scarcer
-    resource. Bit-identical either way.
-
     With a ``checkpoint`` manager each sweep's assignment lands in
     Parquet + manifest under ``phase_tag``, and a rerun resumes from the
     latest saved sweep — with the modularity and ``change`` flag that
@@ -404,7 +436,7 @@ def louvain_phase(
                 spark, edges, nv, lower=lower, max_inner=max_inner,
                 checkpoint=checkpoint, phase_tag=phase_tag,
                 sample_pct=sample_pct, hub_salt=hub_salt,
-                prepared=louvain_prepare(edges), fuse_state=fuse_state,
+                prepared=louvain_prepare(edges),
             )
     edges, deg, two_m, selfw = prepared
     const = 1.0 / two_m if two_m > 0 else 0.0
@@ -443,61 +475,16 @@ def louvain_phase(
 
     while True:
         num_iters += 1
-        # the candidate community's (c_degree, c_size) ride the MESSAGE —
-        # every dst state row already knows its own community's info,
-        # which IS the (ay, size_y) the gain needs — so no candidate-level
-        # info join exists; the per-vertex state merge happens inside the
-        # cogrouped Arrow kernel instead of a JVM candidate×state join.
-        info = (
-            curr2.filter(F.col("comm") >= 0)
-            .groupBy("comm")
-            .agg(F.count("*").alias("c_size"),
-                 F.sum("degree").alias("c_degree"))
-        )
-        # a2_x = Σ_c c_degree² (≡ Σ_v degree·ax_full, exact for the
-        # integer-valued weights the engine guarantees) rides the TARGET
-        # job via the kernel's _a2t column, so the state table needs no
-        # observation of its own; the state materialization exists so its
-        # two consumers (the message join and the cogroup) share one
-        # computation (see fuse_state above).
-        state = curr2.join(info, "comm").select(
-            "vid", F.col("comm").alias("sc"), "degree", "self_w",
-            F.col("c_degree").alias("ax_full"),
-            F.col("c_size").alias("size_sc"),
-        )
-        if not fuse_state:
-            state = cut_lineage(state)
-        cdst2 = state.select(
-            F.col("vid").alias("dst"), F.col("sc").alias("comm_dst"),
-            F.col("ax_full").alias("ay"), F.col("size_sc").alias("size_y"),
-        )
-        msg = edges.join(cdst2, "dst")
-        if hub_salt:
-            # two-stage salted aggregation: spread hub keys over hub_salt
-            # reducers before the final combine (GPU degree-bin playbook)
-            salt = F.pmod(F.xxhash64(F.col("dst").cast("long")), F.lit(hub_salt))
-            msg = (
-                msg.groupBy("src", "comm_dst", salt.alias("_salt"))
-                .agg(F.sum("weight").alias("weight"),
-                     F.first("ay").alias("ay"),
-                     F.first("size_y").alias("size_y"))
-            )
-        cand = (
-            msg.groupBy("src", "comm_dst")
-            .agg(F.sum("weight").alias("eiy"),
-                 F.first("ay").alias("ay"),
-                 F.first("size_y").alias("size_y"))
-        )
-        # ALL per-sweep bookkeeping (e_xx, moved, a2_x) rides the
-        # target-materialization job as observed metrics — zero stats
-        # jobs; _a2t is projected off before the checkpoint stores the
-        # state
+        state, target = louvain_sweep(edges, curr2, const, nblocks,
+                                      hub_salt=hub_salt)
+        # ALL per-sweep bookkeeping rides the target-materialization job
+        # as observed metrics — zero stats jobs: e_xx, moved, and a2_x =
+        # Σ_c c_degree² (≡ Σ_v degree·ax_full via the kernel's _a2t
+        # column, exact for the integer-valued weights the engine
+        # guarantees); _a2t is projected off before the checkpoint
         obs_target = Observation()
         target = cut_lineage(
-            _apply_sampling(
-                _sweep_arrow_cogrouped(cand, state, const, nblocks),
-                sample_pct, num_iters,
-            ).observe(
+            _apply_sampling(target, sample_pct, num_iters).observe(
                 obs_target,
                 F.sum("own_w").alias("e_xx"),
                 F.sum(
@@ -567,7 +554,8 @@ def louvain_phase_colored(
     158-262`` semantics, deterministic thanks to the deterministic JP
     coloring): singleton init; within an iteration the color classes are
     processed in ascending order, each class's moves applied in place and
-    community info refreshed before the next class (Gauss-Seidel); the
+    community info refreshed before the next class (Gauss-Seidel) — each
+    class is one ``louvain_sweep`` with the class as its movers; the
     modularity is computed after the full sweep; stop when
     (currMod − prevMod) < thresh, when nothing moved, or at max_inner.
 
@@ -594,29 +582,21 @@ def _louvain_phase_colored_impl(
     thresh: float = 1e-2,
     max_inner: int = 25,
 ) -> PhaseResult:
-    deg = (
-        edges.groupBy(F.col("src").alias("vid"))
-        .agg(F.sum("weight").alias("degree"))
-        .transform(cut_lineage)
-    )
-    two_m = deg.agg(F.sum("degree")).collect()[0][0] or 0.0
+    # edges pre-tagged with the source's color class: each class sweep
+    # sends the messages of its own out-rows only
+    k_src = colors.select(F.col("vid").alias("src"), F.col("color").alias("k_src"))
+    edges, deg, two_m, selfw = louvain_prepare(edges.join(k_src, "src"))
     const = 1.0 / two_m if two_m > 0 else 0.0
-    selfw = edges.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("vid"), F.col("weight").alias("self_w")
-    ).transform(cut_lineage)
+    nblocks = spark.sparkContext.defaultParallelism
 
-    verts = deg.select("vid")
-    # edges pre-tagged with the source's color class: the per-class filter
-    # prunes the candidate join to the class frontier only
-    e_col = edges.join(
-        colors.select(F.col("vid").alias("src"), F.col("color").alias("k_src")), "src"
-    ).transform(cut_lineage)
-    n_colors = colors.join(verts, "vid").agg(F.max("color")).collect()[0][0]
-    n_colors = int(n_colors) + 1 if n_colors is not None else 0
-
-    curr = verts.select(
-        "vid", F.col("vid").alias("comm"), F.lit(False).alias("moved")
-    ).transform(cut_lineage)
+    # singleton init over the vertices with edge rows; static vertex attrs
+    # and the color class ride the state through every class checkpoint
+    curr = cut_lineage(
+        deg.join(selfw, "vid", "left").join(colors, "vid").select(
+            "vid", F.col("vid").alias("comm"), F.lit(False).alias("moved"),
+            "degree", F.coalesce("self_w", F.lit(0.0)).alias("self_w"), "color",
+        )
+    )
     prev_mod = -1.0
     change = False
     num_iters = 0
@@ -625,8 +605,7 @@ def _louvain_phase_colored_impl(
     # non-empty color classes, ascending — one driver collect up front
     # instead of touching empty classes inside the sweep
     live_colors = sorted(
-        int(r["color"])
-        for r in colors.join(verts, "vid").select("color").distinct().collect()
+        int(r["color"]) for r in curr.select("color").distinct().collect()
     )
 
     while True:
@@ -634,92 +613,23 @@ def _louvain_phase_colored_impl(
         if not live_colors:  # empty graph: nothing can move
             trajectory.append(0.0)
             break
-        # reset the per-sweep moved flag; the flag rides the class-loop
-        # checkpoints so the sweep needs NO extra count action per class —
-        # moved_total is read once from the final class's materialized state
-        curr = curr.select("vid", "comm", F.lit(False).alias("moved"))
         obs_sweep = None
         for k in live_colors:
-            info = comm_info(curr, deg)
-            cdst = curr.select(F.col("vid").alias("dst"), F.col("comm").alias("comm_dst"))
-            cand = (
-                e_col.filter(F.col("k_src") == k)
-                .join(cdst, "dst")
-                .groupBy("src", "comm_dst")
-                .agg(F.sum("weight").alias("eiy"))
+            # one sweep per class: the class moves against the community
+            # info of the moves applied so far (Gauss-Seidel)
+            state, target = louvain_sweep(
+                edges.filter(F.col("k_src") == k), curr, const, nblocks,
+                movers=F.col("color") == k,
             )
-            own = (
-                curr.join(colors, "vid").filter(F.col("color") == k)
-                .select("vid", F.col("comm").alias("sc"))
-                .join(
-                    cand.select(
-                        F.col("src").alias("vid"),
-                        F.col("comm_dst").alias("sc"),
-                        F.col("eiy").alias("own_w"),
-                    ),
-                    ["vid", "sc"],
-                    "left",
-                )
-                .select("vid", "sc", F.coalesce("own_w", F.lit(0.0)).alias("own_w"))
-            )
-            base = (
-                own.join(deg, "vid")
-                .join(
-                    info.select(F.col("comm").alias("sc"),
-                                F.col("c_degree").alias("ax_full"),
-                                F.col("c_size").alias("size_sc")),
-                    "sc",
-                )
-                .join(selfw, "vid", "left")
-                .select(
-                    "vid", "sc", "degree", "size_sc",
-                    (F.col("own_w") - F.coalesce("self_w", F.lit(0.0))).alias("eix"),
-                    (F.col("ax_full") - F.col("degree")).alias("ax"),
-                )
-            )
-            scored = (
-                cand.withColumnRenamed("src", "vid")
-                .join(base, "vid")
-                .filter(F.col("comm_dst") != F.col("sc"))
-                .join(
-                    info.select(F.col("comm").alias("comm_dst"),
-                                F.col("c_degree").alias("ay"),
-                                F.col("c_size").alias("size_y")),
-                    "comm_dst",
-                )
-                .select(
-                    "vid", "sc", "comm_dst", "size_sc", "size_y",
-                    _gain(F.col("eiy"), F.col("eix"), F.col("degree"),
-                          F.col("ay"), F.col("ax"), F.lit(const)).alias("gain"),
-                )
-            )
-            best = (
-                scored.filter(F.col("gain") > 0)
-                .groupBy("vid")
-                .agg(
-                    F.max_by(
-                        F.struct("comm_dst", "size_y"),
-                        F.struct(F.col("gain"), -F.col("comm_dst")),
-                    ).alias("b")
-                )
-                .select("vid", F.col("b.comm_dst").alias("cand_comm"),
-                        F.col("b.size_y").alias("cand_size"))
-            )
-            moves = (
-                base.join(best, "vid")
-                .filter(
-                    ~(
-                        (F.col("cand_size") == 1)
-                        & (F.col("size_sc") == 1)
-                        & (F.col("cand_comm") > F.col("sc"))
-                    )
-                )
-                .select("vid", F.col("cand_comm").alias("new_comm"))
-            )
-            new_curr = curr.join(moves, "vid", "left").select(
-                "vid",
-                F.coalesce("new_comm", F.col("comm")).alias("comm"),
-                (F.col("moved") | F.col("new_comm").isNotNull()).alias("moved"),
+            hops = target.select("vid", F.col("comm").alias("new_comm"),
+                                 (F.col("comm") != F.col("sc")).alias("hop"))
+            # the first class starts the sweep's moved flags afresh; the
+            # flags ride the class checkpoints, so the sweep runs no count
+            moved = F.col("moved") if k != live_colors[0] else F.lit(False)
+            new_curr = curr.join(hops, "vid", "left").select(
+                "vid", F.coalesce("new_comm", F.col("comm")).alias("comm"),
+                (moved | F.coalesce("hop", F.lit(False))).alias("moved"),
+                "degree", "self_w", "color",
             )
             if k == live_colors[-1]:
                 # fold the post-sweep modularity into the final class's
@@ -727,9 +637,7 @@ def _louvain_phase_colored_impl(
                 # edge counted once per direction, self-loops once — same
                 # total as the intra-edge filter-sum), a2_x = Σ_v degree ·
                 # c_degree(comm(v)) ≡ Σ_c c_degree², and the moved count
-                # all ride the checkpoint job as observed metrics — the
-                # sweep runs exactly one action per color class, zero
-                # stats jobs (mirrors the basic path, see :648-676)
+                # all ride the checkpoint job as observed metrics
                 nc_src = new_curr.select(
                     F.col("vid").alias("src"), F.col("comm").alias("comm_src"))
                 nc_dst = new_curr.select(
@@ -740,15 +648,11 @@ def _louvain_phase_colored_impl(
                     .groupBy(F.col("src").alias("vid"))
                     .agg(F.sum("weight").alias("own_w"))
                 )
-                info_new = (
-                    new_curr.join(deg, "vid")
-                    .groupBy("comm")
-                    .agg(F.sum("degree").alias("ax_full"))
-                )
+                info_new = new_curr.groupBy("comm").agg(
+                    F.sum("degree").alias("ax_full"))
                 obs_sweep = Observation()
                 new_curr = (
                     new_curr.join(own_new, "vid", "left")
-                    .join(deg, "vid")
                     .join(info_new, "comm")
                     .observe(
                         obs_sweep,
@@ -756,10 +660,11 @@ def _louvain_phase_colored_impl(
                         F.sum(F.col("degree") * F.col("ax_full")).alias("a2_x"),
                         F.sum(F.col("moved").cast("long")).alias("n_moved"),
                     )
-                    .select("vid", "comm", "moved")
+                    .select("vid", "comm", "moved", "degree", "self_w", "color")
                 )
             new_curr = new_curr.transform(cut_lineage)
-            curr.unpersist()
+            release(state)
+            release(curr)
             curr = new_curr
 
         mrow = obs_sweep.get
@@ -860,15 +765,7 @@ def louvain(
         if phase == 1:
             c_orig = c
         else:
-            # project: C_orig[i] = C_phase[C_orig[i]] (ref J3,
-            # ``runMultiPhaseBasic.cpp:112-124``); -1 rows pass through
-            proj = c.select(F.col("vid").alias("comm_prev"), F.col("comm").alias("comm_new"))
-            c_orig = (
-                c_orig.withColumnRenamed("comm", "comm_prev")
-                .join(proj, "comm_prev", "left")
-                .select("vid", F.coalesce("comm_new", F.col("comm_prev")).alias("comm"))
-                .transform(cut_lineage)
-            )
+            c_orig = project_assignment(c_orig, c).transform(cut_lineage)
 
         if phase > max_phases or tot_iters > max_total_iters:
             break
@@ -888,15 +785,11 @@ def louvain(
                     max_phases=max_phases - phase + 1,
                     max_inner=max_inner, init_mod=curr_mod,
                 )
-                proj = local_table(
-                    spark, list(enumerate(tail["C"])), "comm_prev long, comm_new long"
+                tail_c = local_table(
+                    spark, list(enumerate(tail["C"])), "vid long, comm long"
                 )
-                c_orig = (
-                    c_orig.withColumnRenamed("comm", "comm_prev")
-                    .join(F.broadcast(proj), "comm_prev", "left")
-                    .select("vid", F.coalesce("comm_new", F.col("comm_prev")).alias("comm"))
-                    .transform(cut_lineage)
-                )
+                c_orig = project_assignment(
+                    c_orig, F.broadcast(tail_c)).transform(cut_lineage)
                 return LouvainResult(
                     c=c_orig,
                     modularity=tail["modularity"],
@@ -958,13 +851,7 @@ def louvain_coloring(
         if c_orig is None:
             c_orig = c
         else:
-            proj = c.select(F.col("vid").alias("comm_prev"), F.col("comm").alias("comm_new"))
-            c_orig = (
-                c_orig.withColumnRenamed("comm", "comm_prev")
-                .join(proj, "comm_prev", "left")
-                .select("vid", F.coalesce("comm_new", F.col("comm_prev")).alias("comm"))
-                .transform(cut_lineage)
-            )
+            c_orig = project_assignment(c_orig, c).transform(cut_lineage)
         if not res.change or n_clusters == g_nv:
             break
         g_edges = coarsen(g_edges, c).transform(cut_lineage)
@@ -975,15 +862,7 @@ def louvain_coloring(
     phases += fine.phases
     tot_iters += fine.total_iters
     trajectory.extend(fine.trajectory)
-    if c_orig is None:
-        c_orig = fine.c
-    else:
-        proj = fine.c.select(F.col("vid").alias("comm_prev"), F.col("comm").alias("comm_new"))
-        c_orig = (
-            c_orig.withColumnRenamed("comm", "comm_prev")
-            .join(proj, "comm_prev", "left")
-            .select("vid", F.coalesce("comm_new", F.col("comm_prev")).alias("comm"))
-        )
+    c_orig = fine.c if c_orig is None else project_assignment(c_orig, fine.c)
     final_c, n_clusters = renumber(c_orig)
     return LouvainResult(
         c=final_c.transform(cut_lineage),

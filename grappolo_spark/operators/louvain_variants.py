@@ -14,6 +14,11 @@ from the default SFP path (operators/louvain.py) in three ways:
   236-241``, epilogue ``:263-266``: "we are interested in the previous
   assignment").
 
+The move rule itself is not re-implemented here: every sweep is
+``louvain.louvain_sweep``, the engine's one gain/argmax kernel, with the
+slot-semantics community table below as its ``info`` and the vertices
+that have out-rows as its movers.
+
 Directed (``parallelDirectedLouvainMethod.cpp:47-280``): the sweep runs
 over the OUT-adjacency only, degrees are out-degrees, and the modularity
 constant is doubled — ``calConstantForSecondTerm`` (1/Σdeg_out = 1/m) ×2
@@ -24,7 +29,9 @@ but never used in the move logic. Vertices with no out-edges are assigned
   Documented deviation: from the second sweep on, the reference reads
   ``currCommAss[j] == -1`` for out-isolated neighbours j and then indexes
   ``cInfo[-1]`` — undefined behaviour in C++. The engine (and the numpy
-  oracle, by shared spec) excludes candidate communities with id < 0; on
+  oracle, by shared spec) excludes candidate communities with id < 0 — in
+  the engine a -1 vertex finds no slot in the sweep's ``info`` join, so it
+  sends no message; on
   graphs where every vertex has at least one out-edge (e.g. symmetric
   tables, or transcript reply graphs restricted to live turns) the two
   semantics coincide exactly.
@@ -62,24 +69,24 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..lineage import cut_lineage, pin_partitioned, release
+from ..lineage import cut_lineage, release
 from ..session import local_table, scaled_shuffle_partitions
-from .louvain import _gain, coarsen, renumber
+from .louvain import (coarsen, louvain_prepare, louvain_sweep,
+                      project_assignment, renumber)
 
 
-def _slots_info(curr: DataFrame, deg: DataFrame) -> DataFrame:
+def _slots_info(curr: DataFrame) -> DataFrame:
     """(comm, c_size, c_degree) with the reference's per-vertex slot
     semantics (see module docstring): a vertex assigned -1 still occupies
     its own singleton slot, so it is remapped to ``vid`` before the
     aggregate; out-isolated members contribute degree 0."""
     return (
         curr.select(
-            "vid",
             F.when(F.col("comm") < 0, F.col("vid"))
             .otherwise(F.col("comm"))
             .alias("comm"),
+            "degree",
         )
-        .join(deg, "vid", "left")
         .groupBy("comm")
         .agg(
             F.count("*").alias("c_size"),
@@ -145,23 +152,19 @@ def _base_phase_impl(
     resistance_phase: int | None = None,
     force_sweeps: bool = False,
 ) -> BasePhaseResult:
-    # static out-adjacency pre-partitioned on the per-sweep join key (dst)
-    edges = pin_partitioned(edges, "dst")
-    deg = (
-        edges.groupBy(F.col("src").alias("vid"))
-        .agg(F.sum("weight").alias("degree"))
-        .transform(cut_lineage)
-    )
-    sum_deg = deg.agg(F.sum("degree")).collect()[0][0] or 0.0
+    edges, deg, sum_deg, selfw = louvain_prepare(edges)
     const = const_factor / sum_deg if sum_deg > 0 else 0.0
-    selfw = edges.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("vid"), F.col("weight").alias("self_w")
-    ).transform(cut_lineage)
+    nblocks = spark.sparkContext.defaultParallelism
 
-    verts_all = spark.range(nv).select(F.col("id").alias("vid")).transform(cut_lineage)
-    init = verts_all.select("vid", F.col("vid").alias("comm"))
-    past_df = init         # pastCommAss
-    curr = init            # currCommAss — always covers all nv rows
+    # every vertex keeps a row (out-isolated ones with a null degree), and
+    # the static vertex attrs ride it through every sweep
+    vattr = cut_lineage(
+        spark.range(nv).select(F.col("id").alias("vid"))
+        .join(deg.join(selfw, "vid", "left"), "vid", "left")
+        .select("vid", "degree", F.coalesce("self_w", F.lit(0.0)).alias("self_w"))
+    )
+    curr = vattr.select("vid", F.col("vid").alias("comm"), "degree", "self_w")
+    past = curr            # pastCommAss; curr is currCommAss
     # double-buffer checkpoint handles: the state two generations back is
     # dead after a swap and its blocks are freed eagerly (see lineage.release)
     past_backing = None
@@ -177,108 +180,31 @@ def _base_phase_impl(
 
     while True:
         num_iters += 1
-        info = _slots_info(curr, deg).cache()
-
-        cdst = curr.select(F.col("vid").alias("dst"), F.col("comm").alias("comm_dst"))
-        cand = (
-            edges.join(cdst, "dst")
-            .groupBy("src", "comm_dst")
-            .agg(F.sum("weight").alias("eiy"))
-            .cache()
-        )
-        own = (
-            curr.withColumnRenamed("comm", "sc")
-            .join(deg, "vid")  # restrict the sweep to vertices with out-rows
-            .join(
-                cand.select(
-                    F.col("src").alias("vid"),
-                    F.col("comm_dst").alias("sc"),
-                    F.col("eiy").alias("own_w"),
-                ),
-                ["vid", "sc"],
-                "left",
-            )
-            .select("vid", "sc", "degree",
-                    F.coalesce("own_w", F.lit(0.0)).alias("own_w"))
-        )
-        base = (
-            own.join(
-                info.select(F.col("comm").alias("sc"),
-                            F.col("c_degree").alias("ax_full"),
-                            F.col("c_size").alias("size_sc")),
-                "sc",
-            )
-            .join(selfw, "vid", "left")
-            .select(
-                "vid", "sc", "degree", "size_sc", "own_w",
-                (F.col("own_w") - F.coalesce("self_w", F.lit(0.0))).alias("eix"),
-                (F.col("ax_full") - F.col("degree")).alias("ax"),
-            )
-        )
-        scored = (
-            cand.withColumnRenamed("src", "vid")
-            # comm_dst >= 0 guards the reference's cInfo[-1] UB (see module doc)
-            .filter(F.col("comm_dst") >= 0)
-            .join(base, "vid")
-            .filter(F.col("comm_dst") != F.col("sc"))
-            .join(
-                info.select(F.col("comm").alias("comm_dst"),
-                            F.col("c_degree").alias("ay"),
-                            F.col("c_size").alias("size_y")),
-                "comm_dst",
-            )
-            .select(
-                "vid", "sc", "comm_dst", "size_sc", "size_y",
-                _gain(F.col("eiy"), F.col("eix"), F.col("degree"),
-                      F.col("ay"), F.col("ax"), F.lit(const)).alias("gain"),
-            )
-        )
-        best = (
-            scored.filter(F.col("gain") > 0)
-            .groupBy("vid")
-            .agg(
-                F.max_by(
-                    F.struct("comm_dst", "size_y"),
-                    F.struct(F.col("gain"), -F.col("comm_dst")),
-                ).alias("b")
-            )
-            .select("vid", F.col("b.comm_dst").alias("cand_comm"),
-                    F.col("b.size_y").alias("cand_size"))
+        info = _slots_info(curr)
+        # only vertices with out-rows move; a -1 vertex finds no slot in
+        # the info join, so it sends no message either (the cInfo[-1]
+        # guard, see module doc)
+        state, target = louvain_sweep(
+            edges, curr, const, nblocks, info=info,
+            movers=F.col("degree").isNotNull(),
         )
         # per-sweep bookkeeping rides the target-materialization job as
         # observed metrics (no separate stats job): e_xx, moved, and
-        # a2_x = Σ_v degree·(ax+degree) ≡ Σ_c c_degree² — exact for the
+        # a2_x = Σ_v degree·ax_full ≡ Σ_c c_degree² — exact for the
         # integer-valued weights the engine guarantees (non-out slots
-        # contribute 0 to both sides). The throwaway _a2t term is
-        # projected off before the checkpoint stores the state.
+        # contribute 0 to both sides)
         obs_target = Observation()
         target = cut_lineage(
-            base.join(best, "vid", "left")
-            .select(
-                "vid",
-                F.when(F.col("cand_comm").isNull(), F.col("sc"))
-                .when(  # singleton swap protection (ref :757-759)
-                    (F.col("cand_size") == 1)
-                    & (F.col("size_sc") == 1)
-                    & (F.col("cand_comm") > F.col("sc")),
-                    F.col("sc"),
-                )
-                .otherwise(F.col("cand_comm"))
-                .alias("comm"),
-                "sc",
-                "own_w",
-                (F.col("degree") * (F.col("ax") + F.col("degree"))).alias("_a2t"),
-            )
-            .observe(
+            target.observe(
                 obs_target,
                 F.sum("own_w").alias("e_xx"),
                 F.sum(
                     F.when(F.col("comm") != F.col("sc"), 1).otherwise(0)
                 ).alias("moved"),
                 F.sum("_a2t").alias("a2_x"),
-            )
-            .select("vid", "comm", "sc", "own_w")
+            ).select("vid", "comm")
         )
+        release(state)
 
         stats = obs_target.get
         curr_mod = (stats["e_xx"] or 0.0) * const - (stats["a2_x"] or 0.0) * const * const
@@ -291,10 +217,7 @@ def _base_phase_impl(
             if resistance_phase is not None
             else None
         )
-        info.unpersist()
-        cand.unpersist()
 
-        stop = False
         if resistance_phase is not None and resistance_phase > 1:
             # r_min / Q_AFG bookkeeping (ref :192-218) — guarded by
             # ``if (phase > 1)`` in the reference (:193), so phase 1 keeps
@@ -325,19 +248,18 @@ def _base_phase_impl(
         prev_mod = max(curr_mod, lower)
         # double-buffer swap: past <- curr, curr <- target (full nv rows,
         # out-isolated vertices become -1: ref :174-176)
-        past_df = curr
+        past = curr
         dead = past_backing
         past_backing = curr_backing
         curr_backing = target
-        curr = (
-            verts_all.join(target.select("vid", "comm"), "vid", "left")
-            .select("vid", F.coalesce("comm", F.lit(-1)).alias("comm"))
+        curr = vattr.join(target, "vid", "left").select(
+            "vid", F.coalesce("comm", F.lit(-1)).alias("comm"), "degree", "self_w"
         )
         if dead is not None:
             release(dead)
 
     return BasePhaseResult(
-        c=past_df,
+        c=past.select("vid", "comm"),
         modularity=prev_mod,
         num_iters=num_iters,
         trajectory=trajectory,
@@ -449,13 +371,7 @@ def louvain_fasttrack_resistance(
         if phase == 1:
             c_orig = c
         else:
-            proj = c.select(F.col("vid").alias("comm_prev"), F.col("comm").alias("comm_new"))
-            c_orig = (
-                c_orig.withColumnRenamed("comm", "comm_prev")
-                .join(proj, "comm_prev", "left")
-                .select("vid", F.coalesce("comm_new", F.col("comm_prev")).alias("comm"))
-                .transform(cut_lineage)
-            )
+            c_orig = project_assignment(c_orig, c).transform(cut_lineage)
 
         if phase > max_phases or tot_iters > max_total_iters:
             break

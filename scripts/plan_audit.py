@@ -9,6 +9,8 @@ formatted plans. Checks:
 * hot paths run inside WholeStageCodegen spans
 * the transcript ETL scan does NOT read the text column (Catalyst prunes
   it out of the graph build)
+* the one Louvain sweep (``louvain_sweep``) plans as one cogrouped numpy
+  kernel with no JVM argmax, on a colour-class and an out-row mover set
 
 Usage: python scripts/plan_audit.py [sf_dir]
 """
@@ -178,6 +180,52 @@ def main():
          lambda p: re.search(r"LocalTableScan\n\s*Output \[2\]: "
                               r"\[_pid#\d+, _offset#\d+L\]", p) is not None),
     ], execute=True)
+
+    # 5c. one Louvain sweep for every phase: louvain_sweep on the two
+    # mover sets that are not "every vertex" — a colour class (the
+    # color-staged phase) and the vertices with out-rows (the directed /
+    # resistance base phase). Each plan must hold exactly one cogrouped
+    # numpy kernel and no JVM argmax (max_by) aggregate.
+    from grappolo_spark.operators.coloring import distance1_coloring
+    from grappolo_spark.operators.louvain import louvain_prepare, louvain_sweep
+    from grappolo_spark.operators.louvain_variants import _slots_info
+
+    nblocks = spark.sparkContext.defaultParallelism
+
+    def _kernels_in_tree(p: str) -> int:
+        # node lines of the plan tree only, not the per-node detail list
+        tree = p.split("\n\n", 1)[0]
+        return sum(1 for line in tree.splitlines() if "FlatMapCoGroupsInPandas" in line)
+
+    one_sweep = [
+        ("exactly one FlatMapCoGroupsInPandas", lambda p: _kernels_in_tree(p) == 1),
+        ("no max_by aggregate", lambda p: "max_by" not in p),
+    ]
+    colors5c, _, _ = distance1_coloring(spark, q4, nv5)
+    k_src = colors5c.select(F.col("vid").alias("src"), F.col("color").alias("k_src"))
+    e5c, deg5c, two_m5c, selfw5c = louvain_prepare(q4.join(k_src, "src"))
+    curr5c = deg5c.join(selfw5c, "vid", "left").join(colors5c, "vid").select(
+        "vid", F.col("vid").alias("comm"), "degree",
+        F.coalesce("self_w", F.lit(0.0)).alias("self_w"), "color",
+    )
+    k0 = curr5c.agg(F.min("color")).first()[0]
+    _, class_sweep = louvain_sweep(
+        e5c.filter(F.col("k_src") == k0), curr5c, 1.0 / two_m5c, nblocks,
+        movers=F.col("color") == k0,
+    )
+    audit("louvain_sweep_colour_class", class_sweep, one_sweep)
+
+    e5d, deg5d, sum5d, selfw5d = louvain_prepare(q4.filter(F.col("src") > F.col("dst")))
+    curr5d = spark.range(nv5).select(F.col("id").alias("vid")).join(
+        deg5d.join(selfw5d, "vid", "left"), "vid", "left").select(
+        "vid", F.col("vid").alias("comm"), "degree",
+        F.coalesce("self_w", F.lit(0.0)).alias("self_w"),
+    )
+    _, out_row_sweep = louvain_sweep(
+        e5d, curr5d, 2.0 / sum5d, nblocks, info=_slots_info(curr5d),
+        movers=F.col("degree").isNotNull(),
+    )
+    audit("louvain_sweep_directed_out_rows", out_row_sweep, one_sweep)
 
     # 6. Python-boundary discipline: the north rule requires vectorized
     # pandas/Arrow UDFs ONLY. Plan-level: no audited plan may contain a

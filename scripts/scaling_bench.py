@@ -712,8 +712,9 @@ Arrow cogroup sweep is the engine's one Louvain sweep.
 
 ### Deleted sweep knobs
 
-The Arrow cogroup sweep is now the only Louvain sweep. Every knob on
-the no-better list above but ``fuse_state`` was deleted with the
+The Arrow cogroup sweep is now the only Louvain sweep, and every
+Louvain phase (basic, color-staged, directed, resistance) runs it.
+Every knob on the no-better list above was deleted, most with the
 DataFrame sweep; the measurements that closed each one stay here:
 
 - ``method="dataframe"`` (whole-stage-codegen join/agg sweep): 35.4-42.2s
@@ -728,8 +729,8 @@ DataFrame sweep; the measurements that closed each one stay here:
   pairwise in an interleaved A/B at 61M edge rows / local[32]. AQE
   already runs every exchange as its own stage-job, and column pruning
   defeats exchange reuse, so the |V|-scale state computes twice.
-  Still an option of the one sweep (off by default; its deletion is
-  left to a later change); ``scripts/lv_fuse_probe.py`` is deleted.
+  Deleted: the sweep always checkpoints its state table; the option
+  and ``scripts/lv_fuse_probe.py`` are gone.
 - ``chain_sweeps`` (lazily chained sweep batches): karate 17s -> 59s
   (chain 1 -> 2) and 166s -> 182s on the 61M-row bench corpus. Each
   sweep reads its state twice, so a k-sweep chain plans a 2^k-path tree.

@@ -77,7 +77,8 @@ def test_coloring_partition_invariant(spark):
     assert _collect(c2, "color", nv) == _collect(c7, "color", nv)
 
 
-@pytest.mark.parametrize("name", ["karate", "weighted_two_triangles", "grid3d"])
+@pytest.mark.parametrize(
+    "name", ["karate", "weighted_two_triangles", "grid3d", "disconnected"])
 def test_colored_phase_matches_oracle(spark, name):
     edges, nv = fx.ALL_FIXTURES[name]()
     rows = fx.symmetric_rows(edges)

@@ -57,15 +57,14 @@ def _phase_in_segments(spark, df, nv, seg, ckdir, max_inner=25):
 
 
 @pytest.mark.parametrize("name", PHASE_FIXTURES)
-@pytest.mark.parametrize("method", ["dataframe", "arrow", "arrow+fuse"])
+@pytest.mark.parametrize("method", ["dataframe", "arrow"])
 def test_phase_exact(spark, name, method):
-    # the method id names how the input edges were built; "+fuse" runs
-    # the sweep with its state table left lazy (fuse_state)
+    # the method id names how the input edges were built
     edges, nv = fx.ALL_FIXTURES[name]()
     rows = fx.symmetric_rows(edges)
-    df = _edges(spark, edges, method.split("+")[0])
+    df = _edges(spark, edges, method)
     exp_c, exp_mod, exp_iters, exp_change, exp_traj = louvain_phase_np(rows, nv)
-    res = louvain_phase(spark, df, nv, fuse_state=method.endswith("+fuse"))
+    res = louvain_phase(spark, df, nv)
     assert _collect_c(res.c, nv) == exp_c, name
     assert res.modularity == exp_mod, name
     assert res.num_iters == exp_iters
