@@ -19,32 +19,21 @@ internal ``internalCreateDataFrame`` API is unavailable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-# Serialized blocks by default: checkpointed superstep state held as a few
-# large byte buffers instead of millions of deserialized row objects — at
-# 10M+ rows/state the GC scan cost of object blocks grows with heap size
-# and thread count and dominates the 32-thread runs. Deser/ser is
-# per-partition CPU work, which scales.
-_LEVELS = {
-    # pyspark's MEMORY_AND_DISK is serialized; _DESER is the JVM default
-    "MEMORY_AND_DISK_SER": StorageLevel.MEMORY_AND_DISK,
-    "MEMORY_AND_DISK_DESER": StorageLevel.MEMORY_AND_DISK_DESER,
-    "DISK_ONLY": StorageLevel.DISK_ONLY,
-}
-
-
-def _ckpt_level() -> StorageLevel:
-    name = os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "MEMORY_AND_DISK_SER")
-    return _LEVELS.get(name, _LEVELS["MEMORY_AND_DISK_SER"])
+# Serialized blocks: checkpointed superstep state held as a few large
+# byte buffers instead of millions of deserialized row objects — at 10M+
+# rows/state the GC scan cost of object blocks grows with heap size and
+# thread count and dominates the 32-thread runs. Deser/ser is
+# per-partition CPU work, which scales. (pyspark's MEMORY_AND_DISK is the
+# serialized level; MEMORY_AND_DISK_DESER is the JVM default.)
+_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:
     """localCheckpoint(eager) + drop inherited origin statistics."""
-    ck = df.localCheckpoint(eager=True, storageLevel=_ckpt_level())
+    ck = df.localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
     spark = df.sparkSession
     try:
         jdf = ck._jdf
@@ -83,7 +72,7 @@ def pin_static(df: DataFrame) -> DataFrame:
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return df.localCheckpoint(eager=True, storageLevel=_ckpt_level())
+        return df.localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
@@ -92,11 +81,7 @@ def pin_partitioned(df: DataFrame, key: str) -> DataFrame:
     """Hash-partition + sort a STATIC table on its per-iteration join key
     and checkpoint it with both properties preserved: every superstep's
     sort-merge join then reuses the partitioning AND the ordering, so
-    only the mutable state side is shuffled/sorted. Set
-    ``SPARK_GRAFT_PIN_STATIC=0`` to fall back to the plain lineage cut
-    (A/B harness)."""
-    if os.environ.get("SPARK_GRAFT_PIN_STATIC", "1") == "0":
-        return cut_lineage(df)
+    only the mutable state side is shuffled/sorted."""
     spark = df.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return pin_static(df.repartition(nparts, key).sortWithinPartitions(key))

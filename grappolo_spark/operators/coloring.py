@@ -1,36 +1,49 @@
-"""Distance-1 vertex coloring as deterministic DataFrame supersteps.
+"""The vertex-coloring family as deterministic DataFrame rounds:
+distance-1 (ref C14), MaxMin (C15) and the balanced / equitable
+redistribution strategies (C16).
 
-Reference seed: ``algoDistanceOneVertexColoringOpt``
-(``coloringDistanceOne.cpp:50-233``) — speculative first-fit coloring,
-conflict detection, random-value loser re-queues. The engine runs the
-same speculative scheme but fully deterministic:
+The colorers differ only in policy — who moves, which targets are
+eligible, what capacity applies. Each shared round step is written once
+and every colorer is its policy calling them:
 
-* every uncolored vertex TENTATIVELY takes the smallest color absent from
-  its already-colored neighbourhood (first-fit, ref ``:137-150``);
-* a vertex KEEPS its tentative color unless an uncolored neighbour picked
-  the SAME tentative color with a higher priority — priority =
-  xxhash64(vid), which is a **bijection** on 64-bit ids (every step of
-  the single-lane XXH64 path — odd-constant multiply mod 2^64, rotl,
-  xor-shift — is invertible), so priorities are collision-free and no
-  vid tie-break is needed. This is the reference's
-  ``distanceOneConfResolution`` (``coloringUtils.cpp:70-97``) with the
-  random value made deterministic and partition-invariant;
-* losers re-queue for the next round; rounds repeat until all colored —
-  empirically a handful of rounds (conflicts only arise between
-  neighbours that picked the *same* color in the *same* round).
+* ``_neighbour_table`` — the (src, dst) rows without self-loops, lineage
+  cut once; the round loop runs with stage granularity clamped to their
+  count (``session.scaled_shuffle_partitions``; results are
+  partition-invariant);
+* ``_base_prelude`` — a redistribution's input coloring as base colour +
+  priority, ``ncolors`` inferred as max colour + 1, avg = ceil(nv/ncolors);
+* ``_class_sizes`` — the class-size histogram, one driver collect of
+  O(ncolors) rows (colours are bounded by max degree + 1 at any scale);
+* ``_nb_colours`` / ``_smallest_free`` — the colours a vertex's neighbours
+  hold, and the smallest colour outside them: ``sequence(0, n_blocked)``
+  minus the blocked colours, a bound no larger than the reference's
+  per-vertex ``Mark`` array (``coloringDistanceOne.cpp:110``);
+* ``_pick`` — a target among a palette minus the neighbourhood,
+  ``first_fit`` (smallest) or ``least_used`` (argmin (freq, colour));
+* ``_admit`` — per-target capacity ``avg - freq[t]``, granted in
+  descending priority and consuming each mover's load;
+* ``_resolve`` — adjacent movers with the same target: the higher
+  priority wins;
+* ``_apply`` — apply the moves, cut lineage, and observe the round's exit
+  count (remaining or moved) on that checkpoint, so no round pays a
+  standalone count job.
 
-The self-verification step of the reference (``:206-226``) is
-``validate_coloring`` here (also used in tests).
+Priority is xxhash64(vid), a **bijection** on 64-bit ids (every step of
+the single-lane XXH64 path — odd-constant multiply mod 2^64, rotl,
+xor-shift — is invertible), so priorities are collision-free: no vid
+tie-break is needed and a priority-ordered window is a total order. This
+is the reference's random-value conflict resolution
+(``distanceOneConfResolution``, ``coloringUtils.cpp:70-97``) made
+deterministic and partition-invariant.
 
-Scale: each round = two joins over the uncolored frontier's edges + two
-aggregations, hash-partitioned on vid; the frontier shrinks geometrically.
-The min-free-color search explodes ``sequence(0, n_colored)`` per
-uncolored vertex — bounded by its colored-degree, the same bound as the
-reference's per-vertex ``Mark`` array (``coloringDistanceOne.cpp:110``).
-Oracle twin: ``oracle.coloring_np.distance1_coloring_np``.
+Each colorer has a numpy twin (``oracle/coloring_np.py``) and a DuckDB
+twin (``oracle/coloring_sql.py``).
 """
 
 from __future__ import annotations
+
+import warnings
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,6 +57,149 @@ def _prio(col):
     return F.xxhash64(col.cast("long"))
 
 
+def _neighbours(edges: DataFrame) -> DataFrame:
+    """(src, dst) rows without self-loops."""
+    return edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
+
+
+@contextmanager
+def _neighbour_table(spark: SparkSession, edges: DataFrame):
+    """Yield the round loop's neighbour table, lineage cut once, with
+    stage granularity clamped to its row count (observed on the
+    checkpoint job) for the scope."""
+    obs = Observation()
+    nbr = cut_lineage(_neighbours(edges).observe(obs, F.count(F.lit(1)).alias("n")))
+    with scaled_shuffle_partitions(spark, obs.get["n"]):
+        yield nbr
+
+
+def _base_prelude(colors: DataFrame, nv: int, ncolors: int | None):
+    """(base, ncolors, avg): ``colors`` as (vid, base_color, prio) with
+    lineage cut, ``ncolors`` inferred as max colour + 1 when None, and
+    avg = ceil(nv / ncolors) (0 for an empty palette)."""
+    base = cut_lineage(colors.select(
+        "vid", F.col("color").alias("base_color"), _prio(F.col("vid")).alias("prio")
+    ))
+    if ncolors is None:
+        ncolors = int(base.agg(F.max("base_color")).collect()[0][0] or 0) + 1
+    return base, ncolors, -(-nv // ncolors) if ncolors else 0
+
+
+def _class_sizes(df: DataFrame, key: str, load: str | None = None) -> dict:
+    """{class: Σ load} over ``df`` grouped by ``key``; the load defaults
+    to the member count, and a NULL class keys as None."""
+    n = F.count(F.lit(1)) if load is None else F.sum(load)
+    return {r[0]: r[1] for r in df.groupBy(key).agg(n).collect()}
+
+
+def _lookup(d: dict, key):
+    """``d[key]``, 0 when absent, for a small driver-side int dict."""
+    if not d:
+        return F.lit(0)
+    return F.coalesce(F.create_map(*[F.lit(x) for kv in d.items() for x in kv])[key],
+                      F.lit(0))
+
+
+def _nb_colours(nbr: DataFrame, movers: DataFrame, state: DataFrame) -> DataFrame:
+    """(vid, t): the distinct non-null colours ``state`` gives each
+    mover's neighbours."""
+    return (
+        nbr.join(movers.select(F.col("vid").alias("src")), "src")
+        .join(state.select(F.col("vid").alias("dst"), F.col("color").alias("t")), "dst")
+        .filter(F.col("t").isNotNull())
+        .select(F.col("src").alias("vid"), "t")
+        .distinct()
+    )
+
+
+def _smallest_free(movers: DataFrame, used: DataFrame, full=()) -> DataFrame:
+    """(vid, prio, t): each mover's smallest colour absent from its
+    ``used`` (vid, t) rows and from ``full``. That colour is at most the
+    number of blocked colours, so ``sequence(0, n_blocked)`` covers it."""
+    n_used = used.groupBy("vid").agg(F.count(F.lit(1)).alias("n"))
+    cand = movers.join(n_used, "vid", "left").select(
+        "vid", "prio",
+        F.explode(F.sequence(F.lit(0), F.coalesce("n", F.lit(0)) + len(full))).alias("t"),
+    )
+    if full:
+        cand = cand.filter(~F.col("t").isin(list(full)))
+    return (
+        cand.join(used, ["vid", "t"], "left_anti")
+        .groupBy("vid", "prio")
+        .agg(F.min("t").alias("t"))
+    )
+
+
+def _pick(movers, nbr, state, palette, freq: dict, rule: str) -> DataFrame:
+    """(movers' columns, t): each mover's target among the ``palette``
+    colours its neighbours do not hold — the smallest (``first_fit``), or
+    the least used by the round-start sizes ``freq``, ties to the smaller
+    colour (``least_used``). Movers with no free colour drop out."""
+    cand = movers.select(
+        "*", F.explode(F.array(*[F.lit(int(c)) for c in palette]).cast("array<int>")).alias("t")
+    )
+    free = cand.join(_nb_colours(nbr, movers, state), ["vid", "t"], "left_anti")
+    if rule == "least_used":
+        t = F.min(F.struct(_lookup(freq, F.col("t")).alias("fc"), F.col("t")))["t"]
+    else:
+        t = F.min("t")
+    return free.groupBy(*movers.columns).agg(t.alias("t"))
+
+
+def _admit(tent: DataFrame, avg: int, freq: dict, load: str | None = None) -> DataFrame:
+    """The ``tent`` (vid, prio, t, ...) rows admitted to their target:
+    per target t, in descending priority, while the cumulative ``load``
+    (1 per mover by default) stays within t's capacity avg - freq[t]. With
+    unit loads the running sum is the row number (priority is a
+    bijection)."""
+    win = Window.partitionBy("t").orderBy(F.desc("prio")).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = F.sum(F.lit(1) if load is None else F.col(load)).over(win)
+    return (
+        tent.withColumn("_cum", cum)
+        .filter(F.col("_cum") <= F.lit(avg) - _lookup(freq, F.col("t")))
+        .drop("_cum")
+    )
+
+
+def _resolve(nbr: DataFrame, movers: DataFrame) -> DataFrame:
+    """``movers`` (vid, prio, t, ...) minus each one that has a neighbour
+    moving to the same target with a higher priority."""
+    other = movers.select(
+        F.col("vid").alias("dst"), F.col("t").alias("t_dst"), F.col("prio").alias("p_dst")
+    )
+    losers = (
+        nbr.join(movers.select(F.col("vid").alias("src"), "t", "prio"), "src")
+        .join(other, "dst")
+        .filter((F.col("t") == F.col("t_dst")) & (F.col("prio") < F.col("p_dst")))
+        .select(F.col("src").alias("vid"))
+    )
+    return movers.join(losers, "vid", "left_anti")
+
+
+def _apply(state: DataFrame, moves: DataFrame, counted=None):
+    """(state', n): ``state`` with each mover's ``color`` set to its
+    target ``t``, lineage cut. n counts the rows where ``counted`` holds
+    — a condition on the joined rows (old ``color``; ``t`` null for a
+    non-mover), by default the movers — observed on the checkpoint job."""
+    obs = Observation()
+    if counted is None:
+        counted = F.col("t").isNotNull()
+    new = cut_lineage(
+        state.join(moves.select("vid", "t"), "vid", "left")
+        .observe(obs, F.sum(counted.cast("long")).alias("n"))
+        .withColumn("color", F.coalesce("t", "color").cast("int"))
+        .drop("t")
+    )
+    return new, int(obs.get["n"] or 0)
+
+
+def _uncolored_after():
+    """``_apply`` count of the rows still uncolored after the round."""
+    return F.col("color").isNull() & F.col("t").isNull()
+
+
 def distance1_coloring(
     spark: SparkSession,
     edges: DataFrame,
@@ -55,6 +211,16 @@ def distance1_coloring(
 
     Vertices with no incident edges get color 0.
 
+    Reference seed: ``algoDistanceOneVertexColoringOpt``
+    (``coloringDistanceOne.cpp:50-233``) — speculative coloring, conflict
+    detection, loser re-queues — run fully deterministic: every uncolored
+    vertex TENTATIVELY takes a color by the ``pick`` rule; it KEEPS it
+    unless an uncolored neighbour picked the SAME color with a higher
+    priority; losers re-queue for the next round. Rounds repeat until all
+    are colored — empirically a handful (conflicts only arise between
+    neighbours that picked the same color in the same round). The
+    reference's self-verification (``:206-226``) is ``validate_coloring``.
+
     ``pick`` selects the tentative-color rule:
 
     * ``first_fit`` (default) — smallest color absent from the colored
@@ -65,138 +231,45 @@ def distance1_coloring(
       back to the first never-used color when every used color is
       blocked (``:113-123``). freq is the round-start assignment
       histogram (the reference's racy atomic freq made Jacobi), collected
-      once per round on the driver — O(n_colors) rows, bounded by max
-      degree + 1 at any scale. Conflict resolution is the same
+      once per round on the driver. Conflict resolution is the same
       bijective-priority rule either way. Oracle twin:
       ``oracle.coloring_np.distance1_coloring_lu_np``.
+
+    Oracle twin (first fit): ``oracle.coloring_np.distance1_coloring_np``.
     """
     if pick not in ("first_fit", "least_used"):
         raise ValueError(f"unknown pick rule: {pick}")
-    nbr = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .transform(cut_lineage)
-    )
-    # stage granularity clamped to the graph for the round loop
-    # (session.scaled_shuffle_partitions; results partition-invariant)
-    with scaled_shuffle_partitions(spark, nbr.count()):
-        return _distance1_impl(spark, nbr, nv, max_rounds, pick)
-
-
-def _distance1_impl(spark, nbr, nv, max_rounds, pick="first_fit"):
-    verts = nbr.select(F.col("src").alias("vid")).distinct()
-    state = verts.select(
-        "vid", F.lit(None).cast("int").alias("color"), _prio(F.col("vid")).alias("prio")
-    ).transform(cut_lineage)
-    # the uncolored count rides each round's state checkpoint as an
-    # observed metric, so a round costs ONE action (no standalone count
-    # job) — at a 1000-executor scale every extra action is a full
-    # scheduler round-trip per coloring round
-    remaining = state.filter(F.col("color").isNull()).count()
-
-    rounds = 0
-    while True:
-        if remaining == 0 or rounds >= max_rounds:
-            break
-        rounds += 1
-
-        unc = state.filter(F.col("color").isNull()).select(
-            F.col("vid").alias("src"), F.col("prio").alias("p_src")
-        )
-        nb = nbr.join(unc, "src").join(
-            state.select(
-                F.col("vid").alias("dst"), F.col("color").alias("nb_color")
-            ),
-            "dst",
-        )
-        used = (
-            nb.filter(F.col("nb_color").isNotNull())
-            .select("src", F.col("nb_color").alias("t"))
-            .distinct()
-        )
-        if pick == "least_used":
-            # ref initColoringLU: argmin (freq, c) over the round-start
-            # palette minus the neighbourhood; first never-used color when
-            # every used color is blocked. The palette histogram is one
-            # O(n_colors) driver collect per round.
-            freq = {
-                int(r["color"]): int(r["n"])
-                for r in state.filter(F.col("color").isNotNull())
-                .groupBy("color").agg(F.count("*").alias("n")).collect()
-            }
-            min_unused = 0
-            while min_unused in freq:
-                min_unused += 1
-            if freq:
-                palette = F.broadcast(local_table(
-                    spark, [(int(c), int(n)) for c, n in freq.items()],
-                    "t int, fc long",
-                ))
-                picked = (
-                    unc.crossJoin(palette)
-                    .join(used, ["src", "t"], "left_anti")
-                    .groupBy("src", "p_src")
-                    .agg(F.min(F.struct(F.col("fc"), F.col("t"))).alias("b"))
-                    .select("src", "p_src", F.col("b.t").alias("t"))
+    with _neighbour_table(spark, edges) as nbr:
+        state = cut_lineage(nbr.select(F.col("src").alias("vid")).distinct().select(
+            "vid", F.lit(None).cast("int").alias("color"), _prio(F.col("vid")).alias("prio")
+        ))
+        remaining = state.count()
+        rounds = 0
+        while remaining and rounds < max_rounds:
+            rounds += 1
+            unc = state.filter(F.col("color").isNull()).select("vid", "prio")
+            if pick == "least_used":
+                freq = _class_sizes(state, "color")
+                freq.pop(None, None)
+                tent = _pick(unc, nbr, state, sorted(freq), freq, pick)
+                min_unused = 0
+                while min_unused in freq:
+                    min_unused += 1
+                tent = tent.unionByName(
+                    unc.join(tent, "vid", "left_anti").withColumn("t", F.lit(min_unused))
                 )
-                fallback = unc.join(
-                    picked.select("src"), "src", "left_anti"
-                ).select("src", "p_src", F.lit(min_unused).alias("t"))
-                tent = picked.unionByName(fallback)
             else:
-                tent = unc.select("src", "p_src", F.lit(0).alias("t"))
-        else:
-            # tentative color: smallest not used by COLORED neighbours
-            # (min free <= colored-degree, so sequence(0, n_colored) covers it)
-            counts = nb.groupBy("src", "p_src").agg(
-                F.count(F.when(F.col("nb_color").isNotNull(), 1)).alias("n_colored")
-            )
-            cand_colors = counts.select(
-                "src", "p_src",
-                F.explode(F.sequence(F.lit(0), F.col("n_colored"))).alias("t"),
-            )
-            tent = (
-                cand_colors.join(used, ["src", "t"], "left_anti")
-                .groupBy("src", "p_src")
-                .agg(F.min("t").alias("t"))
-            )
-        # conflict resolution: drop the tentative color iff an uncolored
-        # neighbour picked the SAME color with a higher (bijective) priority
-        t_dst = tent.select(
-            F.col("src").alias("dst"), F.col("t").alias("t_dst"),
-            F.col("p_src").alias("p_dst"),
-        )
-        conf = (
-            nbr.join(tent.withColumnRenamed("src", "_s"), nbr.src == F.col("_s"))
-            .join(t_dst, "dst")
-            .filter(F.col("t") == F.col("t_dst"))
-            .groupBy(F.col("_s").alias("src"))
-            .agg(F.max("p_dst").alias("mx"))
-        )
-        assigned = (
-            tent.join(conf, "src", "left")
-            .filter(F.col("mx").isNull() | (F.col("p_src") > F.col("mx")))
-            .select(F.col("src").alias("vid"), F.col("t").alias("new_color"))
-        )
-        obs = Observation()
-        state = (
-            state.join(assigned, "vid", "left")
-            .select(
-                "vid",
-                F.coalesce("color", F.col("new_color").cast("int")).alias("color"),
-                "prio",
-            )
-            .observe(obs, F.sum(F.col("color").isNull().cast("long")).alias("unc"))
-            .transform(cut_lineage)
-        )
-        remaining = int(obs.get["unc"] or 0)
+                tent = _smallest_free(unc, _nb_colours(nbr, unc, state))
+            state, remaining = _apply(state, _resolve(nbr, tent), _uncolored_after())
 
-    all_v = spark.range(nv).select(F.col("id").alias("vid"))
-    colors = all_v.join(state.select("vid", "color"), "vid", "left").select(
-        "vid", F.coalesce("color", F.lit(0)).alias("color")
-    )
-    n_colors = colors.agg(F.max("color")).collect()[0][0] + 1
-    return colors.transform(cut_lineage), int(n_colors), rounds
+        obs = Observation()
+        colors = cut_lineage(
+            spark.range(nv).select(F.col("id").alias("vid"))
+            .join(state, "vid", "left")
+            .select("vid", F.coalesce("color", F.lit(0)).alias("color"))
+            .observe(obs, F.max("color").alias("m"))
+        )
+        return colors, int(obs.get["m"]) + 1, rounds
 
 
 def validate_coloring(edges: DataFrame, colors: DataFrame) -> int:
@@ -205,7 +278,7 @@ def validate_coloring(edges: DataFrame, colors: DataFrame) -> int:
     cs = colors.select(F.col("vid").alias("src"), F.col("color").alias("c_src"))
     cd = colors.select(F.col("vid").alias("dst"), F.col("color").alias("c_dst"))
     return (
-        edges.filter(F.col("src") != F.col("dst"))
+        _neighbours(edges)
         .join(cs, "src")
         .join(cd, "dst")
         .filter(F.col("c_src") == F.col("c_dst"))
@@ -254,29 +327,19 @@ def maxmin_coloring(
     Oracle twin: ``oracle.coloring_np.maxmin_coloring_np``.
     """
     max_color = 2 * n_hash * n_itrs
-    nbr = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .transform(cut_lineage)
-    )
-    # seed ALL nv vertices at the sentinel (like the oracle twin): on an
-    # edgeless graph the first round still runs and colors everything 0,
-    # so the reported round count matches maxmin_coloring_np
-    verts = spark.range(nv).select(F.col("id").alias("vid"))
-    state = verts.select("vid", F.lit(max_color).alias("color")).transform(cut_lineage)
-
-    rounds = 0
-    for itr in range(n_itrs):
-        for ihash in range(n_hash):
-            cc = 2 * (itr * n_hash + ihash)
-            unc = state.filter(F.col("color") == max_color).select(
-                "vid",
-                F.xxhash64(F.col("vid").cast("long"),
-                           F.lit(int(ihash)).cast("long")).alias("h"),
-            )
-            if unc.limit(1).count() == 0:
-                break
+    with _neighbour_table(spark, edges) as nbr:
+        # seed ALL nv vertices at the sentinel (like the oracle twin): on an
+        # edgeless graph the first round still runs and colors everything 0,
+        # so the reported round count matches maxmin_coloring_np
+        state = spark.range(nv).select(F.col("id").alias("vid"), F.lit(max_color).alias("color"))
+        remaining = nv
+        rounds = 0
+        while remaining and rounds < n_itrs * n_hash:
+            cc, ihash = 2 * rounds, rounds % n_hash
             rounds += 1
+            unc = state.filter(F.col("color") == max_color).select(
+                "vid", F.xxhash64(F.col("vid").cast("long"), F.lit(ihash).cast("long")).alias("h")
+            )
             # inner joins keep only uncolored-uncolored neighbour pairs:
             # neighbours colored in earlier rounds have color < cc and are
             # skipped by the reference (:143-146)
@@ -291,28 +354,15 @@ def maxmin_coloring(
                     F.max(F.when(F.col("h_src") >= F.col("h_dst"), 1).otherwise(0)).alias("not_min"),
                 )
             )
-            decide = (
-                unc.join(cmp, "vid", "left")
-                .select(
-                    "vid",
-                    # no uncolored neighbours -> vacuous local max (ref corner case)
-                    F.when(F.col("not_max").isNull() | (F.col("not_max") == 0), F.lit(cc))
-                    .when(F.col("not_min") == 0, F.lit(cc + 1))
-                    .alias("new_color"),
-                )
+            decide = unc.join(cmp, "vid", "left").select(
+                "vid",
+                # no uncolored neighbours -> vacuous local max (ref corner case)
+                F.when(F.col("not_max").isNull() | (F.col("not_max") == 0), F.lit(cc))
+                .when(F.col("not_min") == 0, F.lit(cc + 1))
+                .alias("t"),
             )
-            state = (
-                state.join(decide, "vid", "left")
-                .select("vid", F.coalesce("new_color", F.col("color")).alias("color"))
-                .transform(cut_lineage)
-            )
-        else:
-            continue
-        break
-
-    colors = state.select("vid", "color").transform(cut_lineage)
-    n_colored = colors.filter(F.col("color") != max_color).count()
-    return colors, int(n_colored), rounds
+            state, remaining = _apply(state, decide, F.coalesce("t", "color") == max_color)
+        return state, nv - remaining, rounds
 
 
 MBASE_BUCKET_CAP = 1024    # ref bColoring/mBase.cpp:95-96 (avg clamp)
@@ -331,7 +381,6 @@ def balanced_coloring(
     bucket_cap: int = MBASE_BUCKET_CAP,
     oversize_thresh: int = MBASE_OVERSIZE,
     wbase_ref_constant: bool = False,
-    _scaled: bool = False,
 ) -> tuple[DataFrame, int]:
     """Balanced-coloring redistribution (ref C16): vertices in OVERSIZE
     base color classes move to a permissible under-capacity color —
@@ -393,168 +442,59 @@ def balanced_coloring(
     """
     if variant not in ("vbase", "cbase", "wbase", "mbase"):
         raise ValueError(f"unknown balanced-coloring variant: {variant}")
-    if not _scaled:
-        # stage granularity clamped to the graph for the round loop
-        # (session.scaled_shuffle_partitions; results partition-invariant)
-        with scaled_shuffle_partitions(spark, edges.count()):
-            return balanced_coloring(
-                spark, edges, colors, nv, ncolors=ncolors, strategy=strategy,
-                max_rounds=max_rounds, variant=variant,
-                bucket_cap=bucket_cap, oversize_thresh=oversize_thresh,
-                wbase_ref_constant=wbase_ref_constant, _scaled=True,
-            )
-    base = colors.select("vid", F.col("color").alias("base_color")).transform(cut_lineage)
-    nbr = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .transform(cut_lineage)
-    )
-    if ncolors is None:
-        ncolors = int(base.agg(F.max("base_color")).collect()[0][0] or 0) + 1
-
-    state = colors.select(
-        "vid", "color", _prio(F.col("vid")).alias("prio")
-    ).join(base, "vid")
-    if variant == "wbase":
-        deg = nbr.groupBy(F.col("src").alias("vid")).agg(
-            F.count("*").alias("w")
-        )
-        state = state.join(deg, "vid", "left").select(
-            "vid", "color", "prio", "base_color",
-            F.coalesce("w", F.lit(0)).cast("long").alias("w"),
-        )
-        total_w = int(
-            state.agg(F.sum("w")).collect()[0][0] or 0
-        )
-        if wbase_ref_constant:
-            # BIT-PARITY with the truncating reference constant
-            # (wBase.cpp:94 ceil(ne/ncolors) on integer operands = floor;
-            # class loads sum to 2*ne, so every class is structurally
-            # oversize and the drain loop terminates by exhaustion /
-            # max_rounds — the documented deviation, now selectable)
-            ne = int(nbr.count()) // 2
-            avg = ne // ncolors
+    with _neighbour_table(spark, edges) as nbr:
+        base, ncolors, avg = _base_prelude(colors, nv, ncolors)
+        state = base.select("vid", F.col("base_color").alias("color"), "prio", "base_color")
+        if variant == "wbase":
+            deg = nbr.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("w"))
+            state = state.join(deg, "vid", "left").withColumn(
+                "w", F.coalesce("w", F.lit(0)).cast("long"))
+            if wbase_ref_constant:
+                # BIT-PARITY with the truncating reference constant
+                # (wBase.cpp:94 ceil(ne/ncolors) on integer operands = floor;
+                # class loads sum to 2*ne, so every class is structurally
+                # oversize and the drain loop terminates by exhaustion /
+                # max_rounds — the documented deviation, now selectable)
+                avg = nbr.count() // 2 // ncolors
+            else:
+                total_w = int(state.agg(F.sum("w")).collect()[0][0] or 0)
+                avg = -(-total_w // ncolors)  # attainable weighted mean (ceil)
         else:
-            avg = -(-total_w // ncolors)  # attainable weighted mean (ceil)
-        load = F.sum("w").alias("n")
-    else:
-        state = state.withColumn("w", F.lit(1).cast("long"))
-        avg = -(-nv // ncolors)  # ceil
-        load = F.count("*").alias("n")
-    if variant == "mbase" and avg > bucket_cap + 64:
-        avg = bucket_cap
-    state = state.transform(cut_lineage)
+            state = state.withColumn("w", F.lit(1).cast("long"))
+        if variant == "mbase" and avg > bucket_cap + 64:
+            avg = bucket_cap
+        state = cut_lineage(state)
 
-    freq0 = {
-        int(r["base_color"]): int(r["n"])
-        for r in state.groupBy("base_color").agg(load).collect()
-    }
-    if variant == "mbase":
-        oversize = sorted(c for c, n in freq0.items() if n > oversize_thresh)
-    else:
-        oversize = sorted(c for c, n in freq0.items() if n > avg)
-    if not oversize:
-        return colors.select("vid", "color"), 0
+        donor_above = oversize_thresh if variant == "mbase" else avg
+        over = sorted(c for c, n in _class_sizes(state, "base_color", "w").items()
+                      if n > donor_above)
+        if not over:
+            return colors.select("vid", "color"), 0
 
-    rounds = 0
-    over_set = [int(c) for c in oversize]
-    while rounds < max_rounds:
-        # ONE driver collect per round carries the color loads AND the
-        # movers-exist flag (load of base-oversize members per color) —
-        # no standalone movers-probe job
-        fr = state.groupBy("color").agg(
-            load,
-            F.sum(
-                F.when(F.col("base_color").isin(over_set), F.col("w"))
-                .otherwise(F.lit(0))
-            ).alias("n_over"),
-        ).collect()
-        freq = {int(r["color"]): int(r["n"]) for r in fr}
-        has_movers = any(
-            int(r["n"]) > avg and int(r["n_over"] or 0) > 0 for r in fr
-        )
-        eligible = sorted(
-            c for c in range(ncolors)
-            if freq.get(c, 0) < avg and (variant == "cbase" or c not in oversize)
-        )
-        if not eligible or not has_movers:
-            break
-        rounds += 1
-        movers = state.filter(
-            F.col("base_color").isin(over_set)
-            & F.col("color").isin([int(c) for c in freq if freq[c] > avg])
-        )
-
-        # candidate (mover, target) pairs minus colors used by neighbours
-        cand = movers.select(
-            "vid", "prio", "w",
-            F.explode(F.array(*[F.lit(int(c)) for c in eligible])).alias("t"),
-        )
-        nb_colors = (
-            nbr.join(movers.select(F.col("vid").alias("src")), "src")
-            .join(state.select(F.col("vid").alias("dst"), F.col("color").alias("t")), "dst")
-            .select(F.col("src").alias("vid"), "t")
-            .distinct()
-        )
-        free = cand.join(nb_colors, ["vid", "t"], "left_anti")
-        if strategy == "least_used":
-            fmap = F.create_map(
-                *[F.lit(x) for c in eligible for x in (int(c), freq.get(c, 0))]
-            )
-            pick = (
-                free.withColumn("fc", fmap[F.col("t")])
-                .groupBy("vid", "prio", "w")
-                .agg(F.min(F.struct(F.col("fc"), F.col("t"))).alias("b"))
-                .select("vid", "prio", "w", F.col("b.t").alias("t"))
-            )
-        else:  # first_fit
-            pick = free.groupBy("vid", "prio", "w").agg(F.min("t").alias("t"))
-
-        # per-color admission capacity avg - freq, granted in priority
-        # order; admission consumes each mover's LOAD (w = 1 vertex for
-        # vbase/cbase, degree for wbase — cumulative-sum ≡ row_number in
-        # the unit case, so the vbase SQL twin is unchanged)
-        win = Window.partitionBy("t").orderBy(F.desc("prio")).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        capmap = F.create_map(
-            *[F.lit(x) for c in eligible for x in (int(c), avg - freq.get(c, 0))]
-        )
-        admitted = (
-            pick.withColumn("cw", F.sum("w").over(win))
-            .filter(F.col("cw") <= capmap[F.col("t")])
-            .select("vid", "prio", "t")
-        )
-        # adjacent same-target movers: the higher priority wins
-        a_dst = admitted.select(
-            F.col("vid").alias("dst"), F.col("t").alias("t_dst"),
-            F.col("prio").alias("p_dst"),
-        )
-        losers = (
-            nbr.join(admitted.withColumnRenamed("vid", "src"), "src")
-            .join(a_dst, "dst")
-            .filter((F.col("t") == F.col("t_dst")) & (F.col("prio") < F.col("p_dst")))
-            .select(F.col("src").alias("vid"))
-            .distinct()
-        )
-        moves = admitted.join(losers, "vid", "left_anti").select("vid", F.col("t"))
-        # the applied-move count rides the state checkpoint (one action
-        # per round); numpy twin breaks on zero moves the same way
-        obs = Observation()
-        state = (
-            state.join(moves, "vid", "left")
-            .observe(obs, F.sum(F.col("t").isNotNull().cast("long")).alias("n_moved"))
-            .select(
-                "vid",
-                F.coalesce(F.col("t"), F.col("color")).cast("int").alias("color"),
-                "prio", "base_color", "w",
-            )
-            .transform(cut_lineage)
-        )
-        if int(obs.get["n_moved"] or 0) == 0:
-            break
-
-    return state.select("vid", "color"), rounds
+        rounds = 0
+        while rounds < max_rounds:
+            # ONE driver collect per round carries the color loads AND the
+            # movers-exist flag (load of base-oversize members per color)
+            fr = state.groupBy("color").agg(
+                F.sum("w").alias("n"),
+                F.sum(F.when(F.col("base_color").isin(over), F.col("w")).otherwise(0))
+                .alias("n_over"),
+            ).collect()
+            freq = {r["color"]: r["n"] for r in fr}
+            eligible = [c for c in range(ncolors)
+                        if freq.get(c, 0) < avg and (variant == "cbase" or c not in over)]
+            if not eligible or not any(r["n"] > avg and r["n_over"] for r in fr):
+                break
+            rounds += 1
+            movers = state.filter(
+                F.col("base_color").isin(over)
+                & F.col("color").isin([c for c, n in freq.items() if n > avg])
+            ).select("vid", "prio", "w")
+            tent = _pick(movers, nbr, state, eligible, freq, strategy)
+            state, moved = _apply(state, _resolve(nbr, _admit(tent, avg, freq, "w")))
+            if not moved:
+                break
+        return state.select("vid", "color"), rounds
 
 
 def bbase_coloring(
@@ -585,90 +525,49 @@ def bbase_coloring(
 
     Returns ((vid, color), rounds ∈ {0, 1}).
     """
-    base = colors.select(
-        "vid", F.col("color").alias("base_color"), _prio(F.col("vid")).alias("prio")
-    ).transform(cut_lineage)
-    nbr = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .transform(cut_lineage)
-    )
-    if ncolors is None:
-        ncolors = int(base.agg(F.max("base_color")).collect()[0][0] or 0) + 1
-    avg = -(-nv // ncolors) if ncolors else 0
+    with _neighbour_table(spark, edges) as nbr:
+        base, ncolors, avg = _base_prelude(colors, nv, ncolors)
+        freq0 = _class_sizes(base, "base_color")
+        donors = sorted(c for c in freq0 if freq0[c] > avg)
+        if not donors:
+            return colors.select("vid", "color"), 0
 
-    freq0 = {
-        int(r["base_color"]): int(r["n"])
-        for r in base.groupBy("base_color").agg(F.count("*").alias("n")).collect()
-    }
-    donors = sorted(c for c in freq0 if freq0[c] > avg)
-    if not donors:
-        return colors.select("vid", "color"), 0
+        # driver-side slab plan: (donor, target, slab_start, slab_end)
+        new_freq = dict(freq0)
+        plan_rows = []
+        for ci in donors:
+            st_post = 0
+            for ti in range(ncolors - 1, -1, -1):
+                if new_freq[ci] <= avg:
+                    break
+                if ti == ci:
+                    continue
+                if new_freq.get(ti, 0) < avg:
+                    n_move = min(avg - new_freq.get(ti, 0), new_freq[ci] - avg)
+                    plan_rows.append((ci, ti, st_post, st_post + n_move))
+                    st_post += n_move
+                    new_freq[ci] -= n_move
+                    new_freq[ti] = new_freq.get(ti, 0) + n_move
 
-    # driver-side slab plan: (donor, target, slab_start, slab_end)
-    new_freq = dict(freq0)
-    plan_rows = []
-    for ci in donors:
-        st_post = 0
-        for ti in range(ncolors - 1, -1, -1):
-            if new_freq[ci] <= avg:
-                break
-            if ti == ci:
-                continue
-            if new_freq.get(ti, 0) < avg:
-                n_move = min(avg - new_freq.get(ti, 0), new_freq[ci] - avg)
-                plan_rows.append((ci, ti, st_post, st_post + n_move))
-                st_post += n_move
-                new_freq[ci] -= n_move
-                new_freq[ti] = new_freq.get(ti, 0) + n_move
-
-    plan = F.broadcast(local_table(
-        spark, plan_rows, "base_color int, t int, st long, en long"
-    ))
-    # rank donor-class members by descending priority; slab interval join
-    win = Window.partitionBy("base_color").orderBy(F.desc("prio"))
-    ranked = (
-        base.filter(F.col("base_color").isin([int(c) for c in donors]))
-        .withColumn("r", F.row_number().over(win) - 1)
-    )
-    planned = (
-        ranked.join(plan, "base_color")
-        .filter((F.col("r") >= F.col("st")) & (F.col("r") < F.col("en")))
-        .select("vid", "prio", "t")
-    ).transform(cut_lineage)
-
-    # conflict: target used by a neighbour's BASE color
-    nb_base = (
-        nbr.join(planned.select(F.col("vid").alias("src"), "t"), "src")
-        .join(
-            base.select(F.col("vid").alias("dst"), F.col("base_color").alias("t")),
-            ["dst", "t"],
+        plan = F.broadcast(local_table(
+            spark, plan_rows, "base_color int, t int, st long, en long"
+        ))
+        # rank donor-class members by descending priority; slab interval join
+        win = Window.partitionBy("base_color").orderBy(F.desc("prio"))
+        planned = cut_lineage(
+            base.filter(F.col("base_color").isin(donors))
+            .withColumn("r", F.row_number().over(win) - 1)
+            .join(plan, "base_color")
+            .filter((F.col("r") >= F.col("st")) & (F.col("r") < F.col("en")))
+            .select("vid", "prio", "t")
         )
-        .select(F.col("src").alias("vid"))
-        .distinct()
-    )
-    # adjacent planned movers with the same target: higher priority wins
-    p_dst = planned.select(
-        F.col("vid").alias("dst"), F.col("t").alias("t_dst"),
-        F.col("prio").alias("p_dst"),
-    )
-    losers = (
-        nbr.join(planned.withColumnRenamed("vid", "src"), "src")
-        .join(p_dst, "dst")
-        .filter((F.col("t") == F.col("t_dst")) & (F.col("prio") < F.col("p_dst")))
-        .select(F.col("src").alias("vid"))
-        .distinct()
-    )
-    moves = (
-        planned.join(nb_base, "vid", "left_anti")
-        .join(losers, "vid", "left_anti")
-        .select("vid", "t")
-    )
-    out = (
-        colors.join(moves, "vid", "left")
-        .select("vid", F.coalesce(F.col("t"), F.col("color")).cast("int").alias("color"))
-    )
-    return out, 1
+        # adjacency is resolved among ALL planned movers; a winner then
+        # still stays when a neighbour's BASE color is its target
+        state = base.select("vid", F.col("base_color").alias("color"))
+        moves = _resolve(nbr, planned).join(
+            _nb_colours(nbr, planned, state), ["vid", "t"], "left_anti")
+        out, _ = _apply(state, moves)
+        return out, 1
 
 
 def rbase_coloring(
@@ -690,136 +589,47 @@ def rbase_coloring(
     same-tentative movers to the higher priority, losers re-queued; the
     reference's reverse-color queue order (``:73-76``) is scheduling
     metadata replaced by the priority order. Leftovers at ``max_rounds``
-    (never on the gate corpora) keep their base color. Oracle twin
-    (identical spec): ``oracle.coloring_np.rbase_coloring_np``.
+    (never on the gate corpora) keep their base color, with a
+    ``RuntimeWarning``. Oracle twin (identical spec):
+    ``oracle.coloring_np.rbase_coloring_np``.
 
     Returns ((vid, color), rounds_run).
     """
-    base = colors.select(
-        "vid", F.col("color").alias("base_color"), _prio(F.col("vid")).alias("prio")
-    ).transform(cut_lineage)
-    nbr = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .transform(cut_lineage)
-    )
-    if ncolors is None:
-        ncolors = int(base.agg(F.max("base_color")).collect()[0][0] or 0) + 1
-    avg = -(-nv // ncolors) if ncolors else 0
-    if avg <= 0:
-        return colors.select("vid", "color"), 0
+    with _neighbour_table(spark, edges) as nbr:
+        base, ncolors, avg = _base_prelude(colors, nv, ncolors)
+        if avg <= 0:
+            return colors.select("vid", "color"), 0
+        state = base.select("vid", F.lit(None).cast("int").alias("color"), "prio", "base_color")
+        remaining = nv
+        rounds = 0
+        while rounds < max_rounds:
+            # ONE collect per round: the NULL class is the uncolored count,
+            # the rest are the per-color sizes
+            freq = _class_sizes(state, "color")
+            remaining = freq.pop(None, 0)
+            if not remaining:
+                break
+            rounds += 1
+            unc = state.filter(F.col("color").isNull()).select("vid", "prio")
+            full = [c for c, n in freq.items() if n >= avg]
+            tent = _smallest_free(unc, _nb_colours(nbr, unc, state), full)
+            state, remaining = _apply(
+                state, _resolve(nbr, _admit(tent, avg, freq)), _uncolored_after())
 
-    state = base.select(
-        "vid", "base_color", "prio", F.lit(None).cast("int").alias("new_color")
-    ).transform(cut_lineage)
-    rounds = 0
-    while rounds < max_rounds:
-        # ONE collect per round: the NULL group is the uncolored count,
-        # the rest are the per-color capacities
-        fr = state.groupBy("new_color").agg(F.count("*").alias("n")).collect()
-        freq = {
-            int(r["new_color"]): int(r["n"])
-            for r in fr if r["new_color"] is not None
-        }
-        remaining = sum(int(r["n"]) for r in fr if r["new_color"] is None)
-        if remaining == 0:
-            break
-        rounds += 1
-        full = sorted(c for c, n in freq.items() if n >= avg)
-
-        unc = state.filter(F.col("new_color").isNull()).select(
-            F.col("vid").alias("src"), F.col("prio").alias("p_src")
-        )
-        nb = nbr.join(unc, "src").join(
-            state.select(F.col("vid").alias("dst"),
-                         F.col("new_color").alias("nb_color")),
-            "dst",
-        )
-        # blocked colors = recolored-neighbour colors ∪ full colors; the
-        # min free color is <= n_blocked, so sequence(0, n_blocked) covers it
-        n_nb = nb.groupBy("src", "p_src").agg(
-            F.count(F.when(F.col("nb_color").isNotNull(), 1)).alias("n_colored")
-        )
-        counts = (
-            state.filter(F.col("new_color").isNull())
-            .select(F.col("vid").alias("src"), F.col("prio").alias("p_src"))
-            .join(n_nb, ["src", "p_src"], "left")
-            .select("src", "p_src",
-                    (F.coalesce("n_colored", F.lit(0)) + F.lit(len(full))).alias("n_blocked"))
-        )
-        cand = counts.select(
-            "src", "p_src",
-            F.explode(F.sequence(F.lit(0), F.col("n_blocked"))).alias("t"),
-        )
-        used = (
-            nb.filter(F.col("nb_color").isNotNull())
-            .select("src", F.col("nb_color").alias("t"))
-            .distinct()
-        )
-        if full:
-            full_df = F.broadcast(local_table(
-                spark, [(int(c),) for c in full], "t int"))
-            cand = cand.join(full_df, "t", "left_anti")
-        tent = (
-            cand.join(used, ["src", "t"], "left_anti")
-            .groupBy("src", "p_src")
-            .agg(F.min("t").alias("t"))
-        )
-        # per-color admission capacity avg - freq, descending priority
-        win = Window.partitionBy("t").orderBy(F.desc("p_src"))
-        capmap = F.create_map(*[
-            F.lit(x) for c, n in freq.items() for x in (int(c), avg - n)
-        ]) if freq else None
-        adm = tent.withColumn("rn", F.row_number().over(win))
-        cap_col = (
-            F.coalesce(capmap[F.col("t")], F.lit(avg)) if capmap is not None
-            else F.lit(avg)
-        )
-        admitted = adm.filter(F.col("rn") <= cap_col).select(
-            F.col("src").alias("vid"), F.col("p_src").alias("prio"), "t"
-        )
-        # adjacent same-tentative movers: higher priority wins
-        a_dst = admitted.select(
-            F.col("vid").alias("dst"), F.col("t").alias("t_dst"),
-            F.col("prio").alias("p_dst"),
-        )
-        losers = (
-            nbr.join(admitted.withColumnRenamed("vid", "src"), "src")
-            .join(a_dst, "dst")
-            .filter((F.col("t") == F.col("t_dst")) & (F.col("prio") < F.col("p_dst")))
-            .select(F.col("src").alias("vid"))
-            .distinct()
-        )
-        winners = admitted.join(losers, "vid", "left_anti").select("vid", "t")
-        state = (
-            state.join(winners, "vid", "left")
-            .select(
-                "vid", "base_color", "prio",
-                F.coalesce("new_color", F.col("t").cast("int")).alias("new_color"),
-            )
-            .transform(cut_lineage)
-        )
-
-    if rounds >= max_rounds:
-        # truncated run: vertices never recolored fall back to their base
-        # color, which can CONFLICT with neighbours' new colors — surface
-        # it so callers can tell a converged recolor from a truncated one
-        # (never hit on the gate corpora; r4 ADVICE)
-        leftover = state.filter(F.col("new_color").isNull()).count()
-        if leftover:
-            import warnings
-
+        if remaining:
+            # truncated run: vertices never recolored fall back to their base
+            # color, which can CONFLICT with neighbours' new colors — surface
+            # it so callers can tell a converged recolor from a truncated one
             warnings.warn(
-                f"rbase_coloring: {leftover} vertices uncolored after "
+                f"rbase_coloring: {remaining} vertices uncolored after "
                 f"max_rounds={max_rounds} keep their base color — the "
                 "returned coloring may be improper; raise max_rounds",
                 RuntimeWarning, stacklevel=2,
             )
-
-    out = state.select(
-        "vid", F.coalesce("new_color", F.col("base_color")).cast("int").alias("color")
-    )
-    return out, rounds
+        out = state.select(
+            "vid", F.coalesce("color", F.col("base_color")).cast("int").alias("color")
+        )
+        return out, rounds
 
 
 def equitable_coloring(
@@ -863,103 +673,30 @@ def equitable_coloring(
 
     Returns ((vid, color), n_donor_classes_processed).
     """
-    base = colors.select(
-        "vid", F.col("color").alias("base_color"), _prio(F.col("vid")).alias("prio")
-    ).transform(cut_lineage)
-    nbr = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .transform(cut_lineage)
-    )
-    if ncolors is None:
-        ncolors = int(base.agg(F.max("base_color")).collect()[0][0] or 0) + 1
-    avg = (nv + ncolors - 1) // ncolors if ncolors else 0
+    with _neighbour_table(spark, edges) as nbr:
+        base, ncolors, avg = _base_prelude(colors, nv, ncolors)
+        freq = _class_sizes(base, "base_color")
+        donors = sorted(c for c, n in freq.items() if n > avg)
+        if not donors:
+            return colors.select("vid", "color"), 0
 
-    freq = {
-        int(r["base_color"]): int(r["n"])
-        for r in base.groupBy("base_color").agg(F.count("*").alias("n")).collect()
-    }
-    donors = sorted(c for c, n in freq.items() if n > avg)
-    if not donors:
-        return colors.select("vid", "color"), 0
-
-    state = base.select("vid", F.col("base_color").alias("color"), "prio")
-    processed = 0
-    for ci in donors:
-        excess = freq.get(ci, 0) - avg
-        if excess <= 0:
-            continue
-        processed += 1
-        eligible = sorted(c for c in range(ncolors) if freq.get(c, 0) < avg)
-        if not eligible:
-            continue
-        movers = state.filter(F.col("color") == int(ci)).select("vid", "prio")
-        cand = movers.select(
-            "vid", "prio",
-            F.explode(F.array(*[F.lit(int(c)) for c in eligible])).alias("t"),
-        )
-        nb_colors = (
-            nbr.join(movers.select(F.col("vid").alias("src")), "src")
-            .join(state.select(F.col("vid").alias("dst"), F.col("color").alias("t")), "dst")
-            .select(F.col("src").alias("vid"), "t")
-            .distinct()
-        )
-        free = cand.join(nb_colors, ["vid", "t"], "left_anti")
-        if pick == "least_used":
-            fmap = F.create_map(
-                *[F.lit(x) for c in eligible for x in (int(c), freq.get(c, 0))]
-            )
-            tent = (
-                free.withColumn("fc", fmap[F.col("t")])
-                .groupBy("vid", "prio")
-                .agg(F.min(F.struct(F.col("fc"), F.col("t"))).alias("b"))
-                .select("vid", "prio", F.col("b.t").alias("t"))
-            )
-        else:
-            tent = free.groupBy("vid", "prio").agg(F.min("t").alias("t"))
-        # per-target admission capacity avg - freq[t], priority order
-        win_t = Window.partitionBy("t").orderBy(F.desc("prio"))
-        capmap = F.create_map(
-            *[F.lit(x) for c in eligible for x in (int(c), avg - freq.get(c, 0))]
-        )
-        adm = tent.withColumn("rn", F.row_number().over(win_t)).filter(
-            F.col("rn") <= capmap[F.col("t")]
-        )
-        # class-global cap: only the first `excess` admitted by priority —
-        # top-k via orderBy+limit (TakeOrderedAndProject: per-partition
-        # partial top-k, no single-partition exchange)
-        kept = (
-            adm.select("vid", "prio", "t")
-            .orderBy(F.desc("prio")).limit(int(excess))
-        )
-        # adjacent same-target movers: higher priority wins, loser stays
-        k_dst = kept.select(
-            F.col("vid").alias("dst"), F.col("t").alias("t_dst"),
-            F.col("prio").alias("p_dst"),
-        )
-        losers = (
-            nbr.join(kept.withColumnRenamed("vid", "src"), "src")
-            .join(k_dst, "dst")
-            .filter((F.col("t") == F.col("t_dst")) & (F.col("prio") < F.col("p_dst")))
-            .select(F.col("src").alias("vid"))
-            .distinct()
-        )
-        moves = kept.join(losers, "vid", "left_anti").select("vid", "t")
-        state = (
-            state.join(moves, "vid", "left")
-            .select(
-                "vid",
-                F.coalesce(F.col("t"), F.col("color")).cast("int").alias("color"),
-                "prio",
-            )
-            .transform(cut_lineage)
-        )
-        # live class sizes carry to the next donor class (one collect per
-        # donor class, O(ncolors) rows — same driver-paced pattern as the
-        # balanced round loop)
-        freq = {
-            int(r["color"]): int(r["n"])
-            for r in state.groupBy("color").agg(F.count("*").alias("n")).collect()
-        }
-
-    return state.select("vid", "color"), processed
+        state = base.select("vid", F.col("base_color").alias("color"), "prio")
+        processed = 0
+        for ci in donors:
+            excess = freq.get(ci, 0) - avg
+            if excess <= 0:
+                continue
+            processed += 1
+            eligible = [c for c in range(ncolors) if freq.get(c, 0) < avg]
+            if not eligible:
+                continue
+            movers = state.filter(F.col("color") == ci).select("vid", "prio")
+            tent = _pick(movers, nbr, state, eligible, freq, pick)
+            # class-global cap: only the first `excess` admitted by priority —
+            # top-k via orderBy+limit (TakeOrderedAndProject: per-partition
+            # partial top-k, no single-partition exchange)
+            kept = _admit(tent, avg, freq).orderBy(F.desc("prio")).limit(excess)
+            state, _ = _apply(state, _resolve(nbr, kept))
+            # live class sizes carry to the next donor class
+            freq = _class_sizes(state, "color")
+        return state.select("vid", "color"), processed

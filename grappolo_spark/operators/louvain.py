@@ -568,7 +568,6 @@ def louvain_phase_colored(
     colored driver gates to, full-width stages are pure scheduling
     overhead — see ``session.scaled_shuffle_partitions``).
     """
-    edges = edges.transform(cut_lineage)
     with scaled_shuffle_partitions(spark, edges.count()):
         return _louvain_phase_colored_impl(
             spark, edges, nv, colors, thresh=thresh, max_inner=max_inner)

@@ -181,6 +181,15 @@ def _base_phase_impl(
     while True:
         num_iters += 1
         info = _slots_info(curr)
+        obs_slots = None
+        if resistance_phase is not None:
+            # Σ size² over the slots (non-out slots included; -1 vertices
+            # drop out of the sweep state yet each still holds a slot)
+            # rides the sweep's state checkpoint, the one job that runs
+            # the slot aggregation
+            obs_slots = Observation()
+            info = info.observe(
+                obs_slots, F.sum(F.col("c_size") * F.col("c_size")).alias("n_c_sq"))
         # only vertices with out-rows move; a -1 vertex finds no slot in
         # the info join, so it sends no message either (the cInfo[-1]
         # guard, see module doc)
@@ -209,14 +218,7 @@ def _base_phase_impl(
         stats = obs_target.get
         curr_mod = (stats["e_xx"] or 0.0) * const - (stats["a2_x"] or 0.0) * const * const
         trajectory.append(curr_mod)
-        # Σ size² is only read by the resistance bookkeeping; it needs the
-        # per-slot sizes (non-out slots included), which don't live on the
-        # target rows — one extra job, resistance variant only
-        n_c_sq = (
-            info.agg(F.sum(F.col("c_size") * F.col("c_size"))).collect()[0][0]
-            if resistance_phase is not None
-            else None
-        )
+        n_c_sq = obs_slots.get["n_c_sq"] if obs_slots is not None else None
 
         if resistance_phase is not None and resistance_phase > 1:
             # r_min / Q_AFG bookkeeping (ref :192-218) — guarded by

@@ -121,10 +121,11 @@ from contextlib import contextmanager  # noqa: E402
 # scaled_shuffle_partitions scope — see the nesting note below
 _SCALED_ACTIVE: dict[str, int] = {}
 
+_ROWS_PER_PARTITION = 100_000
+
 
 @contextmanager
-def scaled_shuffle_partitions(spark: SparkSession, n_rows: int,
-                              rows_per_partition: int = 100_000):
+def scaled_shuffle_partitions(spark: SparkSession, n_rows: int):
     """Clamp ``spark.sql.shuffle.partitions`` to the data for the scope.
 
     Iterative drivers run dozens to hundreds of supersteps; on a SMALL
@@ -135,7 +136,7 @@ def scaled_shuffle_partitions(spark: SparkSession, n_rows: int,
     155s at 32 partitions, 80s at 8, AQE on in both). Partition count
     never changes engine RESULTS (every operator is partition-invariant
     by construction — pytest gates this against the oracles), only stage
-    granularity. On a large graph (n_rows / rows_per_partition >= the
+    granularity. On a large graph (n_rows / _ROWS_PER_PARTITION >= the
     session setting) this is a no-op, so the 100 TB path is untouched.
 
     The override mutates the SESSION-scoped SQLConf, so it is visible to
@@ -147,8 +148,6 @@ def scaled_shuffle_partitions(spark: SparkSession, n_rows: int,
     should pass distinct sessions (``spark.newSession()`` shares the
     context but isolates the conf).
     """
-    rows_per_partition = int(os.environ.get(
-        "SPARK_GRAFT_ROWS_PER_PART", str(rows_per_partition)))
     key = spark.sparkContext.applicationId
     if _SCALED_ACTIVE.get(key):
         # nested scope: keep the outer clamp
@@ -159,7 +158,7 @@ def scaled_shuffle_partitions(spark: SparkSession, n_rows: int,
             _SCALED_ACTIVE[key] -= 1
         return
     prev = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    target = max(4, min(prev, -(-int(n_rows) // rows_per_partition)))
+    target = max(4, min(prev, -(-int(n_rows) // _ROWS_PER_PARTITION)))
     if target == prev:
         yield prev
         return

@@ -11,6 +11,8 @@ formatted plans. Checks:
   it out of the graph build)
 * the one Louvain sweep (``louvain_sweep``) plans as one cogrouped numpy
   kernel with no JVM argmax, on a colour-class and an out-row mover set
+* a distance-1 and a vbase balanced-coloring round broadcast only
+  driver-built local tables, never the neighbour table
 
 Usage: python scripts/plan_audit.py [sf_dir]
 """
@@ -226,6 +228,58 @@ def main():
         movers=F.col("degree").isNotNull(),
     )
     audit("louvain_sweep_directed_out_rows", out_row_sweep, one_sweep)
+
+    # 5d. coloring rounds: the moves of the first distance-1 round and of
+    # the first vbase balanced_coloring round on the transcript graph, as
+    # the engine hands them to coloring._apply. A broadcast may carry a
+    # driver-built table (palette, plan, capacity: a LocalTableScan),
+    # never the neighbour table or any other checkpointed (E-scale) side.
+    from grappolo_spark.operators import coloring as C
+
+    e5e, nv5e = T.cached_transcript_graph(spark, sf)
+    first_moves = []
+    apply = C._apply
+
+    def spy(state, moves, counted=None):
+        first_moves.append(moves)
+        return apply(state, moves, counted)
+
+    C._apply = spy
+    try:
+        colors5e, _, _ = C.distance1_coloring(spark, e5e, nv5e)
+        d1_moves = first_moves[0]
+        first_moves.clear()
+        C.balanced_coloring(spark, e5e, colors5e, nv5e, max_rounds=1)
+    finally:
+        C._apply = apply
+    vbase_moves = first_moves[0]
+
+    def _broadcasts_over_local_tables(p: str) -> bool:
+        # every BroadcastExchange subtree of the plan tree must bottom out
+        # in a LocalTableScan and read no checkpointed Scan ExistingRDD
+        lines = p.split("\n\n", 1)[0].splitlines()
+        for i, line in enumerate(lines):
+            if "BroadcastExchange" not in line:
+                continue
+            depth = len(line) - len(line.lstrip(" +-:"))
+            sub = []
+            for nxt in lines[i + 1:]:
+                if len(nxt) - len(nxt.lstrip(" +-:")) <= depth:
+                    break
+                sub.append(nxt)
+            if not any("LocalTableScan" in s for s in sub) or any(
+                    "Scan ExistingRDD" in s for s in sub):
+                return False
+        return True
+
+    round_checks = [
+        ("every BroadcastExchange sits over a LocalTableScan",
+         _broadcasts_over_local_tables),
+        ("neighbour table read as a checkpointed scan",
+         lambda p: "Scan ExistingRDD" in p),
+    ]
+    audit("coloring_distance1_round", d1_moves, round_checks)
+    audit("coloring_vbase_round", vbase_moves, round_checks)
 
     # 6. Python-boundary discipline: the north rule requires vectorized
     # pandas/Arrow UDFs ONLY. Plan-level: no audited plan may contain a

@@ -161,6 +161,16 @@ def mem_probe(worker_counts, reps: int = 1) -> dict[int, float]:
     return out
 
 
+# disclosed wherever legs of both shuffle media are compared
+SHUFFLE_MEDIA_NOTE = (
+    "Shuffle media differ by corpus size: legs above 250,000 conversations "
+    "(both cluster sizes) shuffle to disk (`/tmp/spark-local-big`), smaller "
+    "legs to the `/dev/shm` ramdisk when it has 16 GiB free, so an "
+    "amortization pair that straddles 250,000 conversations also changes "
+    "shuffle media."
+)
+
+
 def run_at(cpus: int, n_convs: int, probe: bool = False) -> dict:
     """Run one leg; with probe=True, bracket it with 6-s pure-CPU capacity
     probes at the leg's worker count — the box is a co-tenant VM whose
@@ -325,6 +335,7 @@ The north-rule regime (10^12 edges) carries ~{1e12 / amort[(n_small, hi_convs)][
 work per superstep than even the larger corpus here — the serial term
 that bounds these single-box numbers is gone at that scale, which is the
 measured (not asserted) form of the extrapolation argument above.
+{SHUFFLE_MEDIA_NOTE}
 """
 
     md = f"""# BENCH — N vs 4N scaling evidence
@@ -581,6 +592,7 @@ The amortization cycle repeats across windows as the
 parallelism-independent per-superstep driver term predicts — raw
 efficiency on the 2x corpus vs the 1x corpus per window:
 {", ".join(amort_pairs)}.
+{SHUFFLE_MEDIA_NOTE}
 """
     def _anchor_ratio_line(arecs):
         if len(arecs) < 2:

@@ -302,6 +302,46 @@ def test_rbase_coloring_matches_oracle(spark, name):
     assert max(sizes.values()) <= avg
 
 
+def test_rbase_truncation_warns(spark):
+    """A recolor cut by max_rounds (karate needs 7 rounds) warns that the
+    leftovers keep their base color, and returns exactly what the numpy
+    twin's truncated run returns."""
+    from grappolo_spark.operators.coloring import rbase_coloring
+    from grappolo_spark.oracle.coloring_np import rbase_coloring_np
+
+    edges, nv = fx.karate()
+    rows = fx.symmetric_rows(edges)
+    df = fx.to_spark_edges(spark, edges)
+    colors_np, _, _ = distance1_coloring_np(rows, nv)
+    colors_df, _, _ = distance1_coloring(spark, df, nv)
+    exp, exp_rounds = rbase_coloring_np(rows, nv, colors_np, max_rounds=1)
+    with pytest.warns(RuntimeWarning, match="uncolored after max_rounds=1"):
+        got, rounds = rbase_coloring(spark, df, colors_df, nv, max_rounds=1)
+    assert _collect(got, "color", nv) == exp
+    assert rounds == exp_rounds == 1
+
+
+@pytest.mark.parametrize("strategy", ["vbase", "bbase", "rbase", "ecff"])
+def test_redistribution_partition_invariant(spark, strategy):
+    """One redistribution per code shape — Jacobi rounds (vbase), planned
+    batch (bbase), recolor (rbase), per-donor batch (ecff) — returns the
+    same coloring and round count with its inputs in 2 or 7 partitions."""
+    from grappolo_spark.operators.coloring import (
+        bbase_coloring, equitable_coloring, rbase_coloring,
+    )
+
+    run = {"vbase": balanced_coloring, "bbase": bbase_coloring,
+           "rbase": rbase_coloring, "ecff": equitable_coloring}[strategy]
+    edges, nv = fx.karate()
+    df = fx.to_spark_edges(spark, edges)
+    colors_df, _, _ = distance1_coloring(spark, df, nv)
+    got = []
+    for n in (2, 7):
+        out, rounds = run(spark, df.repartition(n), colors_df.repartition(n), nv)
+        got.append((_collect(out, "color", nv), rounds))
+    assert got[0] == got[1], strategy
+
+
 def test_balanced_coloring_wbase_balances_degree_load(spark):
     """wBase balances Σ degree per class: on karate the distance-1
     coloring piles the high-degree vertices into the early classes, and
